@@ -93,6 +93,7 @@ from collections import OrderedDict
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from gcp_map_reduce_spark import state
 from gcp_map_reduce_spark.operators.similarity import (
     TOP_K,
     _dot,
@@ -240,15 +241,6 @@ def _write_cell_counts(dir_path: str, counts: dict) -> str:
     return fname
 
 
-# Driver-side sidecar cache: the content-addressed filename is a
-# perfect cache key (the sha IS the content), so each generation's
-# counts are read+verified+parsed once per process instead of per
-# screen call — at two-level 100 TB sizing that is a multi-MB parse
-# saved per batch (review catch). Keyed per index_dir (one live entry
-# each, like _CODEBOOK_CACHE) so superseded generations don't pile up.
-_CELL_COUNTS_CACHE: dict = {}
-
-
 def ann_index_cell_counts(index_dir: str, meta: dict | None = None):
     """The index's exact per-cell populations as a READ-ONLY mapping
     (``types.MappingProxyType`` — consumers that accumulate copy with
@@ -274,29 +266,31 @@ def ann_index_cell_counts(index_dir: str, meta: dict | None = None):
     fname = meta.get("cell_counts_file")
     if not fname:
         return None
-    hit = _CELL_COUNTS_CACHE.get(index_dir)
-    if hit and hit[0] == fname:
-        return hit[1]
-    try:
+
+    def load():
         with open(os.path.join(index_dir, fname), "rb") as fh:
             payload = fh.read()
+        sha = hashlib.sha1(payload).hexdigest()[:16]
+        if f"_cell_counts-{sha}.json" != fname:
+            raise ValueError(
+                f"cell-counts sidecar {fname} at {index_dir} does not hash "
+                "to its recorded name — the index was mutated outside the "
+                "writer lock or the file is corrupt; rebuild or re-append"
+            )
+        # an immutable VIEW goes in the memo and to callers: the natural
+        # consumer pattern mutates counts in place (the append path's
+        # accumulate), and a shared mutable dict would silently corrupt
+        # every later read of this generation — writers
+        # that need to accumulate copy explicitly (dict(cc))
+        return MappingProxyType(json.loads(payload))
+
+    # the content-addressed name is a perfect fingerprint (the sha IS the
+    # content): each generation is read+verified+parsed once, not per
+    # screen call — a multi-MB parse per batch at two-level 100 TB sizing
+    try:
+        return state.memo("ann_cell_counts", index_dir, load, fingerprint=fname)
     except FileNotFoundError:
         return None
-    sha = hashlib.sha1(payload).hexdigest()[:16]
-    if f"_cell_counts-{sha}.json" != fname:
-        raise ValueError(
-            f"cell-counts sidecar {fname} at {index_dir} does not hash "
-            "to its recorded name — the index was mutated outside the "
-            "writer lock or the file is corrupt; rebuild or re-append"
-        )
-    # an immutable VIEW goes in the cache and to callers: the natural
-    # consumer pattern mutates counts in place (the append path's
-    # accumulate), and a shared mutable dict would silently corrupt
-    # every later read of this generation (2nd review pass) — writers
-    # that need to accumulate copy explicitly (dict(cc))
-    counts = MappingProxyType(json.loads(payload))
-    _CELL_COUNTS_CACHE[index_dir] = (fname, counts)
-    return counts
 
 
 def _sweep_old_count_files(index_dir: str, keep: set[str]) -> None:
@@ -679,10 +673,7 @@ def _assign_cells(
         )
     import numpy as np
 
-    rows = seeds.orderBy("cell_id").collect()
-    cell_ids = np.array([r.cell_id for r in rows], dtype=np.int64)
-    CE = np.array([r.ce for r in rows], dtype=np.float64)
-    CN2 = np.array([r.cn2 for r in rows], dtype=np.float64)
+    cell_ids, CE, CN2 = _codebook_arrays(seeds)
     # NB: StructType.add mutates in place — mutating feats.schema would
     # desync the df's cached Python schema from the JVM plan; build a
     # fresh StructType instead
@@ -2274,75 +2265,58 @@ def _compact_locked(spark: SparkSession, index_dir: str) -> dict:
     return new_meta
 
 
-# driver-side codebook cache: the codebook is immutable for a published
-# index (publish_atomic swaps the whole dir; appends add SEGMENTS, never
-# touch the codebook), so one collect per (index_dir, publish) serves
-# every subsequent search AND append in the session — same pattern as
-# the streaming codebook cache (streaming/embedding_near_dup.py). Keyed
-# on the codebook DIRECTORY's mtime, not the manifest's: the manifest is
-# rewritten by every append, and invalidating on it would re-collect an
-# unchanged codebook once per streamed batch (r12 measured: the
-# per-trigger codebook job was ~1/4 of the maintenance stream's floor).
-_CODEBOOK_CACHE: dict = {}
+# The codebook is immutable for a published index (publish_atomic swaps
+# the whole dir; appends add SEGMENTS), so one memoized collect per
+# publish serves every later search AND append. Its fingerprint is the
+# codebook DIRECTORY's mtime, not the manifest's: every append rewrites
+# the manifest, and invalidating on it would re-collect an unchanged
+# codebook per streamed batch (~1/4 of the maintenance stream's floor).
+def _codebook_mtime(index_dir: str) -> int:
+    return os.stat(os.path.join(index_dir, "codebook")).st_mtime_ns
 
 
-def _codebook_driver(spark: SparkSession, index_dir: str):
-    """(cell_ids int64[n], CE float64[n, d], CN2 float64[n]) sorted by
-    cell_id, collected once per published index."""
+def _codebook_arrays(codebook: DataFrame) -> tuple:
+    """(cell_ids int64[n], CE float64[n, d], CN2 float64[n]) of a
+    codebook relation, sorted by cell_id (one collect)."""
     import numpy as np
 
-    key = (
-        index_dir,
-        os.stat(os.path.join(index_dir, "codebook")).st_mtime_ns,
-    )
-    hit = _CODEBOOK_CACHE.get(index_dir)
-    if hit and hit[0] == key:
-        return hit[1]
-    rows = (
-        spark.read.parquet(os.path.join(index_dir, "codebook"))
-        .orderBy("cell_id")
-        .collect()
-    )
-    val = (
+    rows = codebook.orderBy("cell_id").collect()
+    return (
         np.array([r.cell_id for r in rows], dtype=np.int64),
         np.array([r.ce for r in rows], dtype=np.float64),
         np.array([r.cn2 for r in rows], dtype=np.float64),
     )
-    _CODEBOOK_CACHE[index_dir] = (key, val)
-    return val
+
+
+def _codebook_driver(spark: SparkSession, index_dir: str):
+    """:func:`_codebook_arrays` of the index's codebook, collected once
+    per published index."""
+    return state.memo(
+        "ann_codebook",
+        (index_dir, 1),
+        lambda: _codebook_arrays(
+            spark.read.parquet(os.path.join(index_dir, "codebook"))
+        ),
+        fingerprint=_codebook_mtime(index_dir),
+    )
 
 
 def _codebook_2l_driver(spark: SparkSession, index_dir: str, meta: dict):
     """Both codebook levels as the :func:`_np_assign_2l` tuple, cached
     like :func:`_codebook_driver` (same immutability argument — appends
     never touch either codebook dir)."""
-    import numpy as np
 
-    key = (
-        index_dir,
-        os.stat(os.path.join(index_dir, "codebook")).st_mtime_ns,
-        "2l",
+    def collect():
+        level2 = _codebook_arrays(
+            spark.read.parquet(os.path.join(index_dir, "codebook2"))
+        )
+        return (
+            *_codebook_driver(spark, index_dir), *level2, int(meta["n_cells2"])
+        )
+
+    return state.memo(
+        "ann_codebook", (index_dir, 2), collect, fingerprint=_codebook_mtime(index_dir)
     )
-    hit = _CODEBOOK_CACHE.get(index_dir + "#2l")
-    if hit and hit[0] == key:
-        return hit[1]
-    ids1, C1, C1n2 = _codebook_driver(spark, index_dir)
-    rows2 = (
-        spark.read.parquet(os.path.join(index_dir, "codebook2"))
-        .orderBy("cell_id")
-        .collect()
-    )
-    val = (
-        ids1,
-        C1,
-        C1n2,
-        np.array([r.cell_id for r in rows2], dtype=np.int64),
-        np.array([r.ce for r in rows2], dtype=np.float64),
-        np.array([r.cn2 for r in rows2], dtype=np.float64),
-        int(meta["n_cells2"]),
-    )
-    _CODEBOOK_CACHE[index_dir + "#2l"] = (key, val)
-    return val
 
 
 def _probes_driver_2l(

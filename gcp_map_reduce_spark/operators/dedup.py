@@ -30,12 +30,12 @@ from __future__ import annotations
 
 import logging
 import os
-import threading
 
 import numpy as np
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from gcp_map_reduce_spark import state
 from gcp_map_reduce_spark.functions.text import WS_SPLIT, normalize_text, sql_normalize
 from gcp_map_reduce_spark.operators.scale import ensure_parallelism, materialize
 from gcp_map_reduce_spark.plans.probes import corpus_key
@@ -730,6 +730,33 @@ def minhash_features_arrow(th_df: DataFrame, n: int = 3) -> DataFrame:
     )
 
 
+# Entry cap of the fused kernels' per-task token-hash memo: high-entropy
+# text (ids, hashes, base64) would otherwise grow it with every token.
+# ~64k entries is a few MB per Python worker.
+TOKEN_HASH_MEMO_MAX = 1 << 16
+
+
+def _md5_token_hasher(modulus: int = 1 << 60):
+    """Per-task ``w -> int(md5(utf8(w))[:15 hex], 16) % modulus`` (the
+    60-bit :func:`portable_hash64` value; the default modulus keeps it
+    whole), hashing each distinct token once; the memo empties when it
+    reaches :data:`TOKEN_HASH_MEMO_MAX`."""
+    import hashlib
+
+    memo: dict[str, int] = {}
+
+    def h64(w: str) -> int:
+        v = memo.get(w)
+        if v is None:
+            if len(memo) >= TOKEN_HASH_MEMO_MAX:
+                memo.clear()
+            v = int(hashlib.md5(w.encode("utf-8")).hexdigest()[:15], 16) % modulus
+            memo[w] = v
+        return v
+
+    return h64
+
+
 def doc_text_features_arrow(
     docs: DataFrame, n: int = 3, want_sig: bool = True, want_arr: bool = True
 ) -> DataFrame:
@@ -770,20 +797,7 @@ def doc_text_features_arrow(
         raise ValueError("need at least one of want_sig/want_arr")
 
     def kernel(batches):
-        import hashlib
-
-        hash_cache: dict[str, int] = {}
-
-        def h64(w: str) -> int:
-            v = hash_cache.get(w)
-            if v is None:
-                v = (
-                    int(hashlib.md5(w.encode("utf-8")).hexdigest()[:15], 16)
-                    % MERSENNE31
-                )
-                hash_cache[w] = v
-            return v
-
+        h64 = _md5_token_hasher(MERSENNE31)
         for pdf in batches:
             if pdf.empty:
                 continue
@@ -1133,21 +1147,12 @@ def simhash_fingerprints(
         n_bits = SIMHASH_BITS
 
         def kernel(batches):
-            import hashlib
             from collections import Counter
 
             import pandas as pd
 
-            hash_cache: dict[str, int] = {}
+            h64 = _md5_token_hasher()
             shifts = np.arange(n_bits, dtype=np.int64)
-
-            def h64(w: str) -> int:
-                v = hash_cache.get(w)
-                if v is None:
-                    v = int(hashlib.md5(w.encode("utf-8")).hexdigest()[:15], 16)
-                    hash_cache[w] = v
-                return v
-
             for pdf in batches:
                 ids, fps = [], []
                 for doc_id, t in zip(pdf["doc_id"], pdf["text"]):
@@ -1336,49 +1341,28 @@ CC_DRIVER_MAX_EDGES = min(
     ),
 )
 
-# One cloned narrow session per (application, width), reused across CC
-# calls: newSession() allocates JVM session state that is never
-# explicitly releasable, so a fresh clone per call would leak one per
-# invocation (2nd review pass). Width values are bounded by the session
-# width, so this dict stays a handful of entries. Keys are application
-# ids (strings — an id() key could pin a stopped context or be REUSED
-# after GC for a different one); the lock closes the check-then-set
-# race two concurrent CC calls would otherwise hit, each leaking a
-# clone (3rd review pass).
-_NARROW_SESSIONS: dict = {}
-_NARROW_SESSIONS_LOCK = threading.Lock()
-
-
 def _narrow_session(spark, width: int):
     """The shared clamped-width clone of ``spark`` (own SQLConf, shared
-    context/blocks). Builder-level confs (AQE, timezone) are inherited
-    from the context conf; the runtime confs the engine sets after
-    session start (sources/tables.py) are re-mirrored on EVERY use —
-    mirroring only at creation would freeze whatever the first caller
-    had set (3rd review pass)."""
-    key = (spark.sparkContext.applicationId, width)
-    with _NARROW_SESSIONS_LOCK:
-        # r16 ADVICE fix: evict clones whose SparkContext is stopped — a
-        # long-lived driver creating contexts serially would otherwise
-        # pin one session per dead application forever
-        for k in [
-            k
-            for k, s in _NARROW_SESSIONS.items()
-            if s.sparkContext._jsc is None
-            or s.sparkContext._jsc.sc().isStopped()
-        ]:
-            del _NARROW_SESSIONS[k]
-        narrow = _NARROW_SESSIONS.get(key)
-        if narrow is None:
-            narrow = spark.newSession()
-            narrow.conf.set("spark.sql.shuffle.partitions", str(width))
-            _NARROW_SESSIONS[key] = narrow
-        for k in ("spark.sql.session.timeZone",
-                  "spark.sql.legacy.parquet.nanosAsLong"):
-            try:
-                narrow.conf.set(k, spark.conf.get(k))
-            except Exception:  # noqa: BLE001 - key absent in this build
-                pass
+    context/blocks), memoized per width: newSession() allocates JVM
+    session state that is never explicitly releasable, so a clone per CC
+    call would leak one per invocation. Builder-level confs (AQE,
+    timezone) are inherited from the context conf; the runtime confs the
+    engine sets after session start (sources/tables.py) are re-mirrored
+    on EVERY use — mirroring only at creation would freeze whatever the
+    first caller had set."""
+
+    def clone():
+        narrow = spark.newSession()
+        narrow.conf.set("spark.sql.shuffle.partitions", str(width))
+        return narrow
+
+    narrow = state.memo("narrow_session", width, clone)
+    for k in ("spark.sql.session.timeZone",
+              "spark.sql.legacy.parquet.nanosAsLong"):
+        try:
+            narrow.conf.set(k, spark.conf.get(k))
+        except Exception:  # noqa: BLE001 - key absent in this build
+            pass
     return narrow
 
 

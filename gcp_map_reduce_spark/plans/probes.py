@@ -13,11 +13,12 @@ pass asks once more than the timed runs), so the estimate is cached per
 later caller — including every timed bench run after the warm-up — gets
 the number back for a dict lookup.
 
-Deliberately NOT an LRU with eviction: the value space is a handful of
-floats per corpus, and silent eviction would turn "probe fires once" —
-the property pytest pins — into a load-dependent maybe. Keys embed a
-:func:`corpus_key` fingerprint (parquet mtime/size), so regenerating a
-corpus in place self-invalidates (r10); ``clear()`` remains for tests.
+The values live in the engine memo store (``state.py``), whose
+per-kind cap sits far above the handful of floats per corpus any
+workload asks for, so "probe fires once" — the property pytest pins —
+stays deterministic, not load-dependent. Keys embed a :func:`corpus_key`
+fingerprint (parquet mtime/size), so regenerating a corpus in place
+self-invalidates; ``clear()`` remains for tests.
 """
 
 from __future__ import annotations
@@ -25,6 +26,8 @@ from __future__ import annotations
 import logging
 import os
 from typing import Callable
+
+from gcp_map_reduce_spark import state
 
 log = logging.getLogger(__name__)
 
@@ -55,10 +58,9 @@ def corpus_key(sf_dir: str, table: str) -> tuple:
     except OSError:
         return (sf_dir, table, "missing")
 
-_CACHE: dict[tuple, float] = {}
-# monotone counters, exposed for the pytest gate ("the cached probe
-# fires once") and for audit logging
-STATS = {"hits": 0, "misses": 0}
+# the probe kind's monotone counters, exposed for the pytest gate ("the
+# cached probe fires once") and for audit logging
+STATS = state.STATS["probe"]
 
 
 def cached_probe(key: tuple, compute: Callable[[], float]) -> float:
@@ -69,16 +71,15 @@ def cached_probe(key: tuple, compute: Callable[[], float]) -> float:
     caller-supplied relation (not an sf_dir) must bypass the cache —
     there is no stable key for an arbitrary DataFrame.
     """
-    if key in _CACHE:
-        STATS["hits"] += 1
-        return _CACHE[key]
-    STATS["misses"] += 1
-    value = compute()
-    _CACHE[key] = value
-    log.info("probe %s -> %.3f (cached for session)", key, value)
-    return value
+
+    def probe() -> float:
+        value = compute()
+        log.info("probe %s -> %.3f (cached for session)", key, value)
+        return value
+
+    return state.memo("probe", key, probe)
 
 
 def clear() -> None:
     """Drop every cached probe (tests; in-place corpus mutation)."""
-    _CACHE.clear()
+    state.clear("probe")

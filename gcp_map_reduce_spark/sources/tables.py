@@ -11,10 +11,11 @@ filter (``scripts/kv_store_server.py:79,103``) becomes real pushdown.
 from __future__ import annotations
 
 import os
-import threading
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from gcp_map_reduce_spark import state
 
 TABLE_NAMES = [
     "region",
@@ -31,40 +32,13 @@ TABLE_NAMES = [
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-# Session-scoped DataFrame memo (r16): ``spark.read.parquet`` pays a
-# driver-side footer/listing pass (~100-150 ms measured) on EVERY call,
-# and multi-table queries re-load the same tables on every invocation —
-# at bench that tax dominated several sub-second queries' wall. A
-# DataFrame is an immutable plan, so handing every caller the same
-# object is safe; the DATA is still read from parquet at execution (this
-# caches plan metadata, never results — the same discipline as the
-# session probe cache, plans/probes.py). Keys fold the parquet
-# mtime/size fingerprint (:func:`corpus_key`), so an in-place
-# regeneration self-invalidates.
-#
-# r17 (ADVICE fix): the r16 WeakKeyDictionary keyed on the session never
-# actually freed anything — the cached DataFrames hold strong references
-# back to their session (df._session), so the value dict kept every key
-# alive forever. Entries are now keyed on (applicationId, id(session))
-# — id() is safe here because the entry holds the session strongly, so
-# the id cannot be reused while the entry lives — and swept when their
-# SparkContext is stopped (the ``_NARROW_SESSIONS`` eviction
-# discipline, dedup.py). Per (sf_dir, table) only the LATEST corpus
-# generation is kept, so in-place regenerations replace instead of
-# accumulate.
-_DF_CACHE: dict[tuple, tuple[SparkSession, dict]] = {}
-_DF_CACHE_LOCK = threading.Lock()
-
-
-def _sweep_stopped_entries() -> None:
-    """Drop cache entries whose SparkContext is stopped (caller holds
-    the lock)."""
-    for k in [
-        k
-        for k, (s, _) in _DF_CACHE.items()
-        if s.sparkContext._jsc is None or s.sparkContext._jsc.sc().isStopped()
-    ]:
-        del _DF_CACHE[k]
+# DataFrame memo: ``spark.read.parquet`` pays a driver-side
+# footer/listing pass (~100-150 ms measured) on EVERY call, a tax that
+# dominated several sub-second queries' wall. A DataFrame is an immutable
+# plan (the DATA is still read at execution), so every caller may share
+# one per corpus generation (:func:`corpus_key` is the fingerprint).
+# ``id(spark)`` is safe in the key: the stored DataFrame holds its
+# session, so the id cannot be reused while the entry lives.
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -86,22 +60,14 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     from gcp_map_reduce_spark.plans.probes import corpus_key
 
-    key = corpus_key(sf_dir, name)
-    cache_id = (spark.sparkContext.applicationId, id(spark))
-    with _DF_CACHE_LOCK:
-        _sweep_stopped_entries()
-        _, per_session = _DF_CACHE.setdefault(cache_id, (spark, {}))
-        hit = per_session.get((sf_dir, name))
-        df = hit[1] if hit is not None and hit[0] == key else None
-    if df is None:
-        df = _canonicalize_timestamps(
+    return state.memo(
+        "table",
+        (id(spark), sf_dir, name),
+        lambda: _canonicalize_timestamps(
             spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet")), name
-        )
-        with _DF_CACHE_LOCK:
-            entry = _DF_CACHE.get(cache_id)
-            if entry is not None:
-                entry[1][(sf_dir, name)] = (key, df)
-    return df
+        ),
+        fingerprint=corpus_key(sf_dir, name),
+    )
 
 
 def _canonicalize_timestamps(df: DataFrame, name: str) -> DataFrame:

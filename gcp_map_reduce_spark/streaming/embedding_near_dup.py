@@ -38,6 +38,7 @@ key="vec_id")`` applies unchanged.
 from __future__ import annotations
 
 import logging
+import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -59,6 +60,7 @@ def _is_missing_path(exc: AnalysisException) -> bool:
         cls is None and "Path does not exist" in str(exc)
     )
 
+from gcp_map_reduce_spark import state
 from gcp_map_reduce_spark.operators.similarity import (
     IVF_DEDUP_CELLS,
     IVF_DEDUP_NPROBE,
@@ -231,67 +233,63 @@ def _emb_cache_append(cache: dict, batch_id: int, ids, E, n2, cells) -> None:
     cache["merged_bids"] = cache["merged_bids"] | {batch_id}
 
 
-# the committed codebook is immutable (created once, first batch), so
-# re-reading it every trigger was one whole Spark job per trigger of
-# pure waste — cache the arrays per store_dir after the first
-# successful load/create (an uncommitted/empty read never populates
-# the cache, so the killed-first-write rebuild path is unchanged)
-_CODEBOOK_CACHE: dict[str, tuple] = {}
-
-
 def _driver_codebook(ss: SparkSession, store_dir: str, feats_pdf,
                      n_cells: int):
     """Driver twin of :func:`_codebook`: (cell_ids, C, cn2) numpy
     arrays, loaded from the persisted parquet or created from this
     batch's ``n_cells`` lowest vec_ids (same commitment rules: an
-    uncommitted/empty read rebuilds; an empty first batch raises)."""
+    uncommitted/empty read rebuilds; an empty first batch raises).
+
+    A committed codebook is immutable, so it is memoized (re-reading it
+    cost one Spark job per trigger), fingerprinted by the ``_codebook``
+    directory's mtime: a wiped store is re-seeded, never served the old
+    codebook, and a store without one is never memoized."""
     import numpy as np
 
-    cached = _CODEBOOK_CACHE.get(store_dir)
-    if cached is not None:
-        return cached
     path = f"{store_dir}/_codebook"
     schema = "cell_id bigint, ce array<double>, cn2 double"
-    try:
-        pdf = ss.read.schema(schema).parquet(path).toPandas()
-        if len(pdf):
-            cb = (
-                pdf["cell_id"].to_numpy(dtype=np.int64),
-                np.stack([np.asarray(e, dtype=np.float64) for e in pdf["ce"]]),
-                pdf["cn2"].to_numpy(dtype=np.float64),
-            )
-            _CODEBOOK_CACHE[store_dir] = cb
-            return cb
-    except AnalysisException as exc:
-        if not _is_missing_path(exc):
-            raise
-        log.debug("no codebook at %s yet; seeding from this batch", path)
-    if len(feats_pdf) == 0:
-        raise ValueError(
-            "run_streaming_embedding_near_dup: the first batch is empty — "
-            "cannot seed the IVF codebook"
-        )
-    import pandas as pd
 
-    seeds = feats_pdf.nsmallest(n_cells, "vec_id")
-    cb_pdf = pd.DataFrame(
-        {
-            "cell_id": seeds["vec_id"].astype("int64").to_numpy(),
-            "ce": [[float(x) for x in e] for e in seeds["e"]],
-            "cn2": seeds["n2"].astype("float64").to_numpy(),
-        }
+    def load_or_seed():
+        try:
+            pdf = ss.read.schema(schema).parquet(path).toPandas()
+        except AnalysisException as exc:
+            if not _is_missing_path(exc):
+                raise
+            log.debug("no codebook at %s yet; seeding from this batch", path)
+            pdf = None
+        if pdf is None or not len(pdf):
+            if len(feats_pdf) == 0:
+                raise ValueError(
+                    "run_streaming_embedding_near_dup: the first batch is "
+                    "empty — cannot seed the IVF codebook"
+                )
+            import pandas as pd
+
+            seeds = feats_pdf.nsmallest(n_cells, "vec_id")
+            pdf = pd.DataFrame(
+                {
+                    "cell_id": seeds["vec_id"].astype("int64").to_numpy(),
+                    "ce": [[float(x) for x in e] for e in seeds["e"]],
+                    "cn2": seeds["n2"].astype("float64").to_numpy(),
+                }
+            )
+            # overwrite heals a killed prior write's _temporary debris
+            ss.createDataFrame(pdf, schema).coalesce(1).write.mode(
+                "overwrite"
+            ).parquet(path)
+        return (
+            pdf["cell_id"].to_numpy(dtype=np.int64),
+            np.stack([np.asarray(e, dtype=np.float64) for e in pdf["ce"]]),
+            pdf["cn2"].to_numpy(dtype=np.float64),
+        )
+
+    try:
+        committed = os.stat(path).st_mtime_ns
+    except FileNotFoundError:
+        return load_or_seed()
+    return state.memo(
+        "stream_codebook", store_dir, load_or_seed, fingerprint=committed
     )
-    # overwrite heals a killed prior write's _temporary debris
-    ss.createDataFrame(cb_pdf, schema).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(path)
-    cb = (
-        cb_pdf["cell_id"].to_numpy(dtype=np.int64),
-        np.stack([np.asarray(e, dtype=np.float64) for e in cb_pdf["ce"]]),
-        cb_pdf["cn2"].to_numpy(dtype=np.float64),
-    )
-    _CODEBOOK_CACHE[store_dir] = cb
-    return cb
 
 
 def run_streaming_embedding_near_dup(

@@ -1131,7 +1131,7 @@ def test_cell_counts_sidecar_integrity_and_legacy(spark, tmp_path, split_corpus)
     longer hash to its recorded name raises loudly."""
     import json as _json
 
-    from gcp_map_reduce_spark.operators import ann_index as mod
+    from gcp_map_reduce_spark import state
     from gcp_map_reduce_spark.operators.ann_index import (
         META_FILE,
         ann_index_append,
@@ -1162,7 +1162,7 @@ def test_cell_counts_sidecar_integrity_and_legacy(spark, tmp_path, split_corpus)
     # mis-size silently (the driver cache keyed on the content-
     # addressed name legitimately serves later calls without re-reading
     # — clear it to exercise the verification path)
-    mod._CELL_COUNTS_CACHE.clear()
+    state.clear("ann_cell_counts")
     side = os.path.join(d, m["cell_counts_file"])
     with open(side, "a") as fh:
         fh.write(" ")

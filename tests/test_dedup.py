@@ -293,6 +293,59 @@ def test_fused_text_kernel_bit_equal_to_expr_front_half(spark):
     assert a == b and len(a) > 0
 
 
+def test_fused_kernels_bit_equal_past_token_memo_cap(spark, tmp_path):
+    """High-entropy text: every task sees more distinct tokens than the
+    per-task token-hash memo holds, so the memo empties and refills
+    mid-task (recurring common words are re-hashed after each reset).
+    Both md5 kernels must stay bit-equal to their expression twins: the
+    simhash Arrow kernel to ``engine="expr"``, the fused minhash/gram
+    kernel to the JVM ``_token_hash_expr`` front half."""
+    import random
+
+    from gcp_map_reduce_spark.operators.dedup import (
+        TOKEN_HASH_MEMO_MAX,
+        _token_hash_expr,
+        doc_text_features_arrow,
+        minhash_features_arrow,
+        simhash_fingerprints,
+    )
+
+    # simhash fans a one-file corpus out round-robin over the default
+    # parallelism; size the corpus so each of those tasks overflows
+    tasks = spark.sparkContext.defaultParallelism
+    per_doc = 300
+    n_docs = (3 * TOKEN_HASH_MEMO_MAX * tasks) // (2 * per_doc)
+    rng = random.Random(11)
+    common = ["the", "of", "and", "data", "token"]
+    rows = [
+        (
+            d,
+            " ".join(
+                common[i % 5] if i % 10 == 0 else f"{rng.getrandbits(48):012x}"
+                for i in range(per_doc)
+            ),
+        )
+        for d in range(n_docs)
+    ]
+    sf_dir = str(tmp_path)
+    spark.createDataFrame(rows, "doc_id bigint, text string").coalesce(
+        1
+    ).write.parquet(sf_dir + "/documents.parquet")
+
+    a = dict(simhash_fingerprints(spark, sf_dir, engine="expr").collect())
+    b = dict(simhash_fingerprints(spark, sf_dir, engine="arrow").collect())
+    assert len(a) == n_docs and a == b
+
+    docs = spark.read.parquet(sf_dir + "/documents.parquet").coalesce(1)
+    old = minhash_features_arrow(
+        docs.select("doc_id", _token_hash_expr(False).alias("th_arr")), 3
+    )
+    new = doc_text_features_arrow(docs, 3)
+    a = {r["doc_id"]: (list(r["sig"]), list(r["gh_arr"])) for r in old.collect()}
+    b = {r["doc_id"]: (list(r["sig"]), list(r["gh_arr"])) for r in new.collect()}
+    assert len(a) == n_docs and a == b
+
+
 def test_fused_text_kernel_drops_null_and_short_docs(spark, tmp_path):
     from gcp_map_reduce_spark.operators.dedup import doc_text_features_arrow
 

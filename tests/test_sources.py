@@ -98,32 +98,39 @@ def test_no_bare_ts_epoch_casts_in_package():
     )
 
 
-class _StoppedSC:
-    """Stub mimicking a stopped SparkContext (``_jsc is None`` is the
-    post-stop state py4j leaves behind)."""
+class _StubSC:
+    """Stub SparkContext to own memo entries; ``_jsc = None`` is the
+    post-stop state pyspark leaves behind."""
 
-    applicationId = "app-dead"
-    _jsc = None
-
-
-class _StoppedSession:
-    sparkContext = _StoppedSC()
+    _jsc = object()
 
 
-def test_df_cache_sweeps_stopped_sessions(spark):
-    # r17 ADVICE fix: the plan memo must not pin dead sessions' entries
-    from gcp_map_reduce_spark.sources import tables
+def _store_under_dead_context(monkeypatch, kind: str, key) -> None:
+    """Memoize ``key`` under a stub context, then stop the stub and
+    reactivate the real context."""
+    from pyspark import SparkContext
 
-    dead_key = ("app-dead", 0)
-    with tables._DF_CACHE_LOCK:
-        tables._DF_CACHE[dead_key] = (_StoppedSession(), {})
-    load_table(spark, SF_ORACLE, "documents")  # any call sweeps
-    with tables._DF_CACHE_LOCK:
-        assert dead_key not in tables._DF_CACHE
-        live = [
-            k for k, (s, _) in tables._DF_CACHE.items() if s is spark
-        ]
-    assert live, "live session's entry must survive the sweep"
+    from gcp_map_reduce_spark import state
+
+    dead = _StubSC()
+    with monkeypatch.context() as m:
+        m.setattr(SparkContext, "_active_spark_context", dead)
+        state.memo(kind, key, lambda: None)
+        assert key in state.keys(kind)
+    dead._jsc = None
+
+
+def test_df_cache_sweeps_stopped_sessions(spark, monkeypatch):
+    # the plan memo must not pin dead sessions' entries
+    from gcp_map_reduce_spark import state
+
+    _store_under_dead_context(monkeypatch, "table", "dead-key")
+    load_table(spark, SF_ORACLE, "documents")
+    keys = state.keys("table")
+    assert "dead-key" not in keys
+    assert (id(spark), SF_ORACLE, "documents") in keys, (
+        "live session's entry must survive"
+    )
 
 
 def test_df_cache_drops_stale_corpus_generation(spark, tmp_path):
@@ -131,7 +138,7 @@ def test_df_cache_drops_stale_corpus_generation(spark, tmp_path):
     # accumulate a second generation
     import shutil
 
-    from gcp_map_reduce_spark.sources import tables
+    from gcp_map_reduce_spark import state
 
     import os as _os
     import time as _time
@@ -143,35 +150,28 @@ def test_df_cache_drops_stale_corpus_generation(spark, tmp_path):
         shutil.copytree(src, dst)
     else:
         shutil.copy2(src, dst)
-    load_table(spark, sf_dir, "documents")
+    first = load_table(spark, sf_dir, "documents")
     # regenerate in place: bump the dataset mtime (1s forward — the
     # fingerprint must actually change)
     later = _time.time() + 5
     targets = list(dst.rglob("*")) if dst.is_dir() else [dst]
     for p in targets:
         _os.utime(p, (later, later))
-    load_table(spark, sf_dir, "documents")
-    with tables._DF_CACHE_LOCK:
-        entry = next(
-            e for k, e in tables._DF_CACHE.items() if e[0] is spark
-        )
-        gens = [k for k in entry[1] if k == (sf_dir, "documents")]
+    assert load_table(spark, sf_dir, "documents") is not first
+    gens = [k for k in state.keys("table") if k[1:] == (sf_dir, "documents")]
     assert len(gens) == 1
 
 
-def test_ep_cache_sweeps_stopped_applications(spark):
-    # r17 VERDICT task: decision memo evicts stopped apps' entries
+def test_ep_cache_sweeps_stopped_applications(spark, monkeypatch):
+    # the decision memo drops stopped apps' entries
+    from gcp_map_reduce_spark import state
     from gcp_map_reduce_spark.operators import scale
 
-    with scale._EP_CACHE_LOCK:
-        scale._EP_CACHE[("app-dead", ("k",), 4)] = (_StoppedSession(), True)
+    _store_under_dead_context(monkeypatch, "fan_out", (("k",), 4))
     df = load_table(spark, SF_ORACLE, "documents")
     scale.ensure_parallelism(df, 2, cache_key=("sweep-test-key",))
-    with scale._EP_CACHE_LOCK:
-        assert ("app-dead", ("k",), 4) not in scale._EP_CACHE
-        live = [
-            k
-            for k, (s, _) in scale._EP_CACHE.items()
-            if k[1] == ("sweep-test-key",)
-        ]
-    assert live, "live probe decision must be memoized"
+    keys = state.keys("fan_out")
+    assert (("k",), 4) not in keys
+    assert (("sweep-test-key",), 2) in keys, (
+        "live probe decision must be memoized"
+    )

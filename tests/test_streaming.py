@@ -984,6 +984,56 @@ def test_embedding_collected_accept_equals_distributed(spark, tmp_path):
     assert results[True][1] == results[False][1]
 
 
+def test_embedding_stream_reseeds_codebook_of_wiped_store(spark, tmp_path):
+    """A store wiped between two streams in one process gets a codebook
+    seeded from the NEW stream's first batch, written under
+    ``store_dir/_codebook``; the driver memo must not serve the old
+    stream's codebook (it is fingerprinted by the directory's mtime)."""
+    import shutil
+
+    import pandas as pd
+
+    from gcp_map_reduce_spark.streaming.embedding_near_dup import (
+        run_streaming_embedding_near_dup,
+    )
+    from tests.conftest import SF_SMALL
+
+    pdf = (
+        pd.read_parquet(f"{SF_SMALL}/embeddings.parquet")
+        .sort_values("vec_id")
+        .reset_index(drop=True)
+    )
+    store = str(tmp_path / "store")
+    n_cells = 4
+
+    def drain(run: str, id_offset: int) -> None:
+        src = tmp_path / run / "vecs"
+        src.mkdir(parents=True)
+        half = len(pdf) // 2
+        for b, part in enumerate((pdf.iloc[:half], pdf.iloc[half:])):
+            part = part.assign(vec_id=part["vec_id"] + id_offset)
+            part.to_parquet(str(src / f"f{b}.parquet"), index=False)
+        q = run_streaming_embedding_near_dup(
+            spark, str(src), str(tmp_path / run / "ckpt"), store,
+            str(tmp_path / run / "out"), n_cells=n_cells,
+            max_files_per_trigger=1,
+        )
+        q.awaitTermination(300)
+
+    def codebook_ids() -> list[int]:
+        return sorted(
+            int(r["cell_id"])
+            for r in spark.read.parquet(f"{store}/_codebook").collect()
+        )
+
+    first_batch = sorted(int(v) for v in pdf["vec_id"].iloc[: len(pdf) // 2])
+    drain("a", 0)
+    assert codebook_ids() == first_batch[:n_cells]
+    shutil.rmtree(store)
+    drain("b", 100_000)
+    assert codebook_ids() == [v + 100_000 for v in first_batch[:n_cells]]
+
+
 def test_streaming_curated_corpus_equals_batch_pipeline(spark, tmp_path):
     """r11 flagship composition at ingest: the streaming curated corpus
     (quality gate -> first-ever exact dedup -> verified near-dup removal)

@@ -32,7 +32,6 @@ import json
 import os
 import sys
 import time
-import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -48,6 +47,7 @@ def main() -> None:
     from bench import HEADLINE, build_overrides
     from gcp_map_reduce_spark.plans import registry
     from gcp_map_reduce_spark.session import get_spark
+    from tools.rest_metrics import last_stage_id, stages_since
 
     registry.load_catalog()
     overrides = build_overrides()
@@ -55,36 +55,19 @@ def main() -> None:
         app_name="audit_recompute", extra_conf={"spark.ui.enabled": "true"}
     )
     spark.sparkContext.setLogLevel("ERROR")
-    ui = spark.sparkContext.uiWebUrl
-    appid = spark.sparkContext.applicationId
-
-    def last_stage() -> int:
-        try:
-            data = json.load(urllib.request.urlopen(
-                f"{ui}/api/v1/applications/{appid}/stages", timeout=10))
-            return max((s.get("stageId", -1) for s in data), default=-1)
-        except Exception:
-            return -1
-
-    def stages_after(b: int) -> list[dict]:
-        data = json.load(urllib.request.urlopen(
-            f"{ui}/api/v1/applications/{appid}/stages"
-            "?status=complete&withSummaries=true&quantiles=0.5,1.0",
-            timeout=10))
-        return [s for s in data if s.get("stageId", -1) > b]
-
     names = args.queries or list(HEADLINE)
     findings = []
     for name in names:
         fn = overrides.get(name) or registry.QUERIES[name]
         try:
             fn(spark, args.dir).write.format("noop").mode("overwrite").save()
-            b = last_stage()
+            b = last_stage_id(spark)
             t0 = time.perf_counter()
             fn(spark, args.dir).write.format("noop").mode("overwrite").save()
             sec = round(time.perf_counter() - t0, 2)
-            time.sleep(0.5)
-            ss = stages_after(b)
+            ss = stages_since(spark, b, "complete", quantiles="0.5,1.0")
+            if ss is None:
+                raise RuntimeError("Spark REST read failed")
         except Exception as exc:
             print(f"{name}: ERR {exc!r}"[:160], flush=True)
             continue

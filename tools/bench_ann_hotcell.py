@@ -65,12 +65,8 @@ def main() -> None:
         ann_index_screen_batch,
     )
     from gcp_map_reduce_spark.session import get_spark
-    from tools.stress_bench import (
-        _last_stage,
-        _release_cluster_state,
-        _stages,
-        _task_stats,
-    )
+    from tools.rest_metrics import last_stage_id
+    from tools.stress_bench import _release_cluster_state, _stages, _task_stats
 
     src = os.path.join(args.base, "embeddings.parquet")
     tbl = pq.read_table(src, columns=["vec_id", "embedding"])
@@ -141,7 +137,7 @@ def main() -> None:
         walls, stats = [], {}
         for _ in range(args.runs):
             _release_cluster_state(spark)
-            marker = _last_stage(spark)
+            marker = last_stage_id(spark)
             t0 = time.monotonic()
             screen().write.format("noop").mode("overwrite").save()
             wall = time.monotonic() - t0

@@ -23,40 +23,22 @@ import shutil
 import sys
 import tempfile
 import time
-import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
+from tools.rest_metrics import last_stage_id, stages_since
+
 
 def _stage_input(spark, after_stage: int) -> dict:
-    ui = spark.sparkContext.uiWebUrl
-    appid = spark.sparkContext.applicationId
-    url = f"{ui}/api/v1/applications/{appid}/stages?status=complete"
-    try:
-        data = json.load(urllib.request.urlopen(url, timeout=10))
-    except Exception:
+    stages = stages_since(spark, after_stage, "complete")
+    if stages is None:
         return {}
-    stages = [s for s in data if s.get("stageId", -1) > after_stage]
     return {
         "input_bytes": sum(s.get("inputBytes", 0) for s in stages),
         "input_rows": sum(s.get("inputRecords", 0) for s in stages),
     }
-
-
-def _last_stage(spark) -> int:
-    ui = spark.sparkContext.uiWebUrl
-    appid = spark.sparkContext.applicationId
-    try:
-        data = json.load(
-            urllib.request.urlopen(
-                f"{ui}/api/v1/applications/{appid}/stages", timeout=10
-            )
-        )
-        return max((s.get("stageId", -1) for s in data), default=-1)
-    except Exception:
-        return -1
 
 
 def q6_band(df):
@@ -81,13 +63,12 @@ def timed(spark, make_df, runs: int) -> dict:
     best, stats = None, {}
     for _ in range(runs):
         df = make_df()
-        before = _last_stage(spark)
+        before = last_stage_id(spark)
         t0 = time.perf_counter()
         rows = df.collect()
         sec = round(time.perf_counter() - t0, 3)
         if best is None or sec < best:
             best = sec
-            time.sleep(1.0)  # let the UI listener bus catch up
             stats = _stage_input(spark, before)
             stats["result"] = [tuple(r) for r in rows]
     return {"sec": best, **stats}

@@ -12,11 +12,9 @@ Usage: python tools/profile_query.py QUERY [--dir DIR] [--runs 1]
 from __future__ import annotations
 
 import argparse
-import json
 import os
 import sys
 import time
-import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -31,6 +29,7 @@ def main() -> None:
     from bench import build_overrides
     from gcp_map_reduce_spark.plans import registry
     from gcp_map_reduce_spark.session import get_spark
+    from tools.rest_metrics import last_stage_id, stages_since
 
     registry.load_catalog()
     overrides = build_overrides()
@@ -44,20 +43,15 @@ def main() -> None:
         },
     )
     spark.sparkContext.setLogLevel("ERROR")
-    ui, appid = spark.sparkContext.uiWebUrl, spark.sparkContext.applicationId
-
     fn(spark, args.dir).write.format("noop").mode("overwrite").save()  # warm
-    url = f"{ui}/api/v1/applications/{appid}/stages"
-    before = max((s["stageId"] for s in json.load(urllib.request.urlopen(url))),
-                 default=-1)
+    before = last_stage_id(spark)
     t0 = time.perf_counter()
     for _ in range(args.runs):
         fn(spark, args.dir).write.format("noop").mode("overwrite").save()
     wall = time.perf_counter() - t0
-    q = "0.0,0.5,0.95,1.0"
-    data = json.load(urllib.request.urlopen(
-        f"{url}?status=complete&withSummaries=true&quantiles={q}"))
-    stages = [s for s in data if s["stageId"] > before]
+    stages = stages_since(spark, before, "complete", quantiles="0.0,0.5,0.95,1.0")
+    if stages is None:
+        raise SystemExit("Spark REST read failed")
     rows = []
     for s in stages:
         tmd = s.get("taskMetricsDistributions") or {}

@@ -27,30 +27,17 @@ import json
 import os
 import sys
 import time
-import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from tools.rest_metrics import last_stage_id, stages_since
+
 
 def _stages(spark, after_stage: int) -> list[dict]:
-    from tools.rest_metrics import _settle
-
-    _settle(spark)  # drain the async listener bus or undercount the
-    # newest stages' metrics on a busy box (rest_metrics docstring)
-    ui = spark.sparkContext.uiWebUrl
-    appid = spark.sparkContext.applicationId
-    url = (
-        f"{ui}/api/v1/applications/{appid}/stages"
-        "?status=complete&withSummaries=true&quantiles=0.5,1.0"
-    )
-    try:
-        data = json.load(urllib.request.urlopen(url, timeout=10))
-    except Exception:
-        return []
-    return [s for s in data if s.get("stageId", -1) > after_stage]
+    return stages_since(spark, after_stage, "complete", quantiles="0.5,1.0") or []
 
 
 def _task_stats(stages: list[dict]) -> dict:
@@ -81,20 +68,6 @@ def _task_stats(stages: list[dict]) -> dict:
     }
 
 
-def _last_stage(spark) -> int:
-    ui = spark.sparkContext.uiWebUrl
-    appid = spark.sparkContext.applicationId
-    try:
-        data = json.load(
-            urllib.request.urlopen(
-                f"{ui}/api/v1/applications/{appid}/stages", timeout=10
-            )
-        )
-        return max((s.get("stageId", -1) for s in data), default=-1)
-    except Exception:
-        return -1
-
-
 def _release_cluster_state(spark) -> None:
     """Python GC alone only drops the py4j wrappers; the driver-JVM GC is
     what lets Spark's ContextCleaner actually release prior queries'
@@ -114,7 +87,7 @@ def run_timed(spark, name, fn, sf_dir, runs, results) -> None:
     _release_cluster_state(spark)
     samples, stats = [], {}
     for _ in range(runs):
-        before = _last_stage(spark)
+        before = last_stage_id(spark)
         t0 = time.perf_counter()
         fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
         sec = round(time.perf_counter() - t0, 3)
