@@ -23,11 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from gcp_map_reduce_spark.operators.dedup import (
-    _gram_hashes_subquery,
-    _token_hash_expr,
-    gram_hash_arrays_arrow,
-)
+from gcp_map_reduce_spark.operators.dedup import _gram_hashes_subquery, gram_features
 from gcp_map_reduce_spark.operators.scale import ensure_parallelism
 from gcp_map_reduce_spark.plans.probes import corpus_key
 from gcp_map_reduce_spark.plans.registry import query
@@ -46,9 +42,9 @@ def doc_shingles_for(docs: DataFrame, n: int) -> DataFrame:
     interpreted string-concat chain — measured ~15 ms/doc -> ~0.1 ms/doc
     at sf0.1). The oracle hashes identically (_gram_hashes_subquery), so
     collisions land in both engines and the value gate stays exact."""
-    return gram_hash_arrays_arrow(
-        docs.select("doc_id", _token_hash_expr(False).alias("th_arr")), n
-    ).select("doc_id", F.explode("gh_arr").alias("sh"))
+    return gram_features(docs, n, want_sig=False).select(
+        "doc_id", F.explode("gh_arr").alias("sh")
+    )
 
 
 @query(

@@ -36,7 +36,12 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gcp_map_reduce_spark import state
-from gcp_map_reduce_spark.functions.text import WS_SPLIT, normalize_text, sql_normalize
+from gcp_map_reduce_spark.functions.text import (
+    PY_NORMALIZE,
+    WS_SPLIT,
+    normalize_text,
+    sql_normalize,
+)
 from gcp_map_reduce_spark.operators.scale import ensure_parallelism, materialize
 from gcp_map_reduce_spark.plans.probes import corpus_key
 from gcp_map_reduce_spark.plans.registry import query
@@ -216,7 +221,7 @@ shingles AS (
 def _gram_hashes_subquery(n: int = 3, pred: str = "TRUE") -> str:
     """Self-contained DuckDB subquery: DISTINCT (doc_id, gh) rolling
     n-gram hashes of the documents matching ``pred`` — the twin of
-    :func:`gram_hash_arrays_arrow` (portable md5 family; identical
+    :func:`gram_features` (portable md5 family; identical
     integer arithmetic, so collisions — ~1e-3 likely per 10^5 docs in
     the 2^31 space — land identically in both engines)."""
     p, c = MERSENNE31, ROLL_C
@@ -360,10 +365,10 @@ def dedup_ngram_jaccard(
     assert t_num / t_den == t
     # ``arr`` lets a caller supply an ALREADY-MATERIALIZED
     # (doc_id, gh_arr) relation — dedup_pair_scores shares one fused
-    # minhash_features_arrow pass across its ngram and minhash legs
+    # gram_features pass across its ngram and minhash legs
     # instead of paying the corpus scan + per-token hash twice (r9)
     if arr is None:
-        arr = materialize(doc_gram_hash_arrays(spark, sf_dir, n=3))
+        arr = materialize(doc_gram_features(spark, sf_dir, want_sig=False))
     if not prefix_filter:
         # carry |A| on the exploded rows (+4 bytes/row): the AllPairs
         # LENGTH bound (jac >= 4/5 forces 4*max <= 5*min, exact integer
@@ -536,9 +541,8 @@ MINHASH_B = [int(v) for v in _rng.randint(0, MERSENNE31, NUM_HASHES, dtype=np.in
 
 def minhash_signatures_for(gh: DataFrame) -> DataFrame:
     """Signatures for a (doc_id, gh_arr) gram-hash DataFrame (see
-    :func:`gram_hash_arrays_for`) — the DF-level core of
-    :func:`minhash_signatures` (streaming micro-batches use this
-    directly)."""
+    :func:`gram_hash_arrays_for`) — the higher-order-function reference
+    :func:`gram_features` is pinned against."""
     # single-traversal fold: one pass over the hash array updating all k
     # mins via zip_with/least — ~15% faster than k separate
     # array_min(transform(...)) passes (same arithmetic, 1/k the
@@ -557,177 +561,102 @@ def minhash_signatures_for(gh: DataFrame) -> DataFrame:
     )
 
 
-def minhash_signatures_arrow(th_df: DataFrame, n: int = 3) -> DataFrame:
-    """Signatures from a (doc_id, th_arr) token-hash DataFrame via ONE
-    vectorized Arrow kernel — bit-identical to the higher-order-function
-    form (asserted in tests), ~20x less CPU.
+def _gram_back_half(ths, n: int, want_sig: bool, want_arr: bool):
+    """The numpy back half of every gram-feature kernel: per-doc int64
+    token-hash arrays -> gram windows -> rolling ``ROLL_C`` combine ->
+    the k affine minima and/or the sorted DISTINCT gram arrays.
 
-    Why this exists: Spark's array lambdas (``transform``/``zip_with``/
+    Returns ``(keep, cols)``: ``keep`` masks the docs with at least one
+    gram (a ``None`` array — a NULL text — or fewer than ``n`` tokens
+    yields none, matching the downstream size>0 semantics) and ``cols``
+    maps ``"sig"`` / ``"gh_arr"`` to one entry per kept doc.
+
+    Why numpy: Spark's array lambdas (``transform``/``zip_with``/
     ``aggregate``) are CodegenFallback — every element op is an
     interpreted expression eval (~0.5 us measured). The rolling-gram
     chain plus the k-min fold is ~(n-1 + k) ops per gram; at 50k docs x
     ~300 grams x (2+32) ops that interpreted ~380 CPU-seconds on the sf1
-    stress set. The same integer arithmetic in numpy over the Arrow
-    batch (flat gram array + segment reduceat) is ~100x fewer cycles per
-    op. Exactness: h < 2^31 and C < 2^20 keep every intermediate under
-    2^62, so int64 numpy == Spark long == DuckDB BIGINT — the oracle
-    still reproduces signatures exactly. ``array_distinct`` is skipped
-    on purpose: duplicate grams cannot change a minimum.
+    stress set. The same integer arithmetic over the flat gram array of
+    an Arrow batch (segment ``reduceat``) is ~100x fewer cycles per op.
+    Exactness: h < 2^31 and C < 2^20 keep every intermediate under
+    2^62, so int64 numpy == Spark long == DuckDB BIGINT and the HOF
+    references (:func:`gram_hash_arrays_for`,
+    :func:`minhash_signatures_for`) and the oracle reproduce the values
+    exactly. Duplicate grams are left in for the minima: they cannot
+    change a minimum."""
+    lens = np.fromiter(
+        (0 if v is None else len(v) for v in ths), np.int64, len(ths)
+    )
+    gcounts = np.maximum(lens - (n - 1), 0)
+    keep = gcounts > 0
+    cols: dict[str, list] = {}
+    if not keep.any():
+        return keep, cols
+    flat = np.concatenate(
+        [np.asarray(v, np.int64) for v, k in zip(ths, keep) if k]
+    )
+    gk = gcounts[keep]
+    offs = np.concatenate(([0], np.cumsum(lens[keep])))[:-1]
+    gstarts = np.concatenate(([0], np.cumsum(gk)))[:-1]
+    # flat indices of each doc's gram windows (boundary-safe)
+    idx = np.repeat(offs, gk) + (
+        np.arange(int(gk.sum()), dtype=np.int64) - np.repeat(gstarts, gk)
+    )
+    g = flat[idx]
+    for j in range(1, n):
+        g = (g * ROLL_C + flat[idx + j]) % MERSENNE31
+    if want_sig:
+        sig = np.empty((len(gk), NUM_HASHES), np.int64)
+        for i, (a, b) in enumerate(zip(MINHASH_A, MINHASH_B)):
+            sig[:, i] = np.minimum.reduceat((a * g + b) % MERSENNE31, gstarts)
+        cols["sig"] = list(sig)
+    if want_arr:
+        # per-segment distinct: stable (segment, value) sort, then
+        # first-in-run mask — no Python loop over docs
+        seg = np.repeat(np.arange(len(gk), dtype=np.int64), gk)
+        order = np.lexsort((g, seg))
+        gs, ss = g[order], seg[order]
+        first = np.ones(len(gs), bool)
+        first[1:] = (gs[1:] != gs[:-1]) | (ss[1:] != ss[:-1])
+        counts = np.bincount(ss[first], minlength=len(gk))
+        cols["gh_arr"] = np.split(gs[first], np.cumsum(counts)[:-1])
+    return keep, cols
+
+
+def _features_schema(want_sig: bool, want_arr: bool) -> str:
+    if not (want_sig or want_arr):
+        raise ValueError("need at least one of want_sig/want_arr")
+    return ", ".join(
+        ["doc_id long"]
+        + ["sig array<long>"] * want_sig
+        + ["gh_arr array<long>"] * want_arr
+    )
+
+
+def token_hash_features_arrow(
+    th_df: DataFrame, n: int = 3, want_sig: bool = True, want_arr: bool = True
+) -> DataFrame:
+    """(doc_id[, sig][, gh_arr]) from a (doc_id, th_arr) frame whose
+    per-token hashes were computed in the JVM (:func:`_token_hash_expr`)
+    — the xxhash64 front half of :func:`gram_features`, and with the md5
+    expression the reference the fused text kernel is pinned against.
 
     Scale shape: mapInPandas is per-partition streaming over Arrow
     batches — no shuffle, no driver collection; memory is O(batch
     grams), bounded by arrow.maxRecordsPerBatch."""
-    import numpy as np
     import pandas as pd
-
-    a_arr, b_arr = np.array(MINHASH_A, np.int64), np.array(MINHASH_B, np.int64)
 
     def kernel(batches):
         for pdf in batches:
-            if pdf.empty:
-                continue
-            vals = pdf["th_arr"].to_numpy()
-            lens = np.fromiter((len(v) for v in vals), np.int64, len(vals))
-            gcounts = np.maximum(lens - (n - 1), 0)
-            keep = gcounts > 0
-            if not keep.any():
-                continue
-            flat = np.concatenate([np.asarray(v, np.int64) for v in vals])
-            offs = np.concatenate(([0], np.cumsum(lens)))[:-1]
-            gk = gcounts[keep]
-            gstarts = np.concatenate(([0], np.cumsum(gk)))[:-1]
-            # flat indices of each doc's gram windows (boundary-safe)
-            idx = np.repeat(offs[keep], gk) + (
-                np.arange(int(gk.sum()), dtype=np.int64) - np.repeat(gstarts, gk)
+            keep, cols = _gram_back_half(
+                pdf["th_arr"].to_numpy(), n, want_sig, want_arr
             )
-            g = flat[idx]
-            for j in range(1, n):
-                g = (g * ROLL_C + flat[idx + j]) % MERSENNE31
-            sig = np.empty((len(gk), NUM_HASHES), np.int64)
-            for i in range(NUM_HASHES):
-                sig[:, i] = np.minimum.reduceat(
-                    (a_arr[i] * g + b_arr[i]) % MERSENNE31, gstarts
+            if keep.any():
+                yield pd.DataFrame(
+                    {"doc_id": pdf["doc_id"].to_numpy()[keep], **cols}
                 )
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].to_numpy()[keep], "sig": list(sig)}
-            )
 
-    return th_df.mapInPandas(kernel, "doc_id long, sig array<long>")
-
-
-def gram_hash_arrays_arrow(th_df: DataFrame, n: int = 3) -> DataFrame:
-    """(doc_id, gh_arr) DISTINCT rolling gram hashes from a (doc_id,
-    th_arr) token-hash DataFrame — the vectorized twin of
-    :func:`gram_hash_arrays_for` (same numpy segment arithmetic as
-    :func:`minhash_signatures_arrow`; set-equal arrays, sorted order).
-    Docs with fewer than ``n`` tokens produce no row, matching the
-    downstream size>0 semantics."""
-    import numpy as np
-    import pandas as pd
-
-    def kernel(batches):
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            vals = pdf["th_arr"].to_numpy()
-            lens = np.fromiter((len(v) for v in vals), np.int64, len(vals))
-            gcounts = np.maximum(lens - (n - 1), 0)
-            keep = gcounts > 0
-            if not keep.any():
-                continue
-            flat = np.concatenate([np.asarray(v, np.int64) for v in vals])
-            offs = np.concatenate(([0], np.cumsum(lens)))[:-1]
-            gk = gcounts[keep]
-            gstarts = np.concatenate(([0], np.cumsum(gk)))[:-1]
-            idx = np.repeat(offs[keep], gk) + (
-                np.arange(int(gk.sum()), dtype=np.int64) - np.repeat(gstarts, gk)
-            )
-            g = flat[idx]
-            for j in range(1, n):
-                g = (g * ROLL_C + flat[idx + j]) % MERSENNE31
-            # per-segment distinct: stable (segment, value) sort, then
-            # first-in-run mask — no Python loop over docs
-            seg = np.repeat(np.arange(len(gk), dtype=np.int64), gk)
-            order = np.lexsort((g, seg))
-            gs, ss = g[order], seg[order]
-            first = np.ones(len(gs), bool)
-            first[1:] = (gs[1:] != gs[:-1]) | (ss[1:] != ss[:-1])
-            gu, su = gs[first], ss[first]
-            counts = np.bincount(su, minlength=len(gk))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].to_numpy()[keep],
-                    "gh_arr": np.split(gu, np.cumsum(counts)[:-1]),
-                }
-            )
-
-    return th_df.mapInPandas(kernel, "doc_id long, gh_arr array<long>")
-
-
-def minhash_features_arrow(th_df: DataFrame, n: int = 3) -> DataFrame:
-    """(doc_id, sig, gh_arr) in ONE kernel pass — the fusion of
-    :func:`minhash_signatures_arrow` and :func:`gram_hash_arrays_arrow`
-    (identical arithmetic on the shared rolling-gram array; per-column
-    equality to the two single-purpose kernels is pytest-gated).
-
-    Why: the banded-plus-verified edge plan needs BOTH the signatures
-    (band candidates) and the distinct gram arrays (exact Jaccard
-    verification). Materializing them separately runs the JVM
-    tokenize + per-token hash expression AND the gram build twice over
-    the full corpus — measured ~2.9 s of the 6.5 s
-    ``dedup_clusters(edge_source="minhash")`` wall at the sf1 stress
-    set. One pass halves the dominant corpus-side stage.
-    """
-    import numpy as np
-    import pandas as pd
-
-    a_arr, b_arr = np.array(MINHASH_A, np.int64), np.array(MINHASH_B, np.int64)
-
-    def kernel(batches):
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            vals = pdf["th_arr"].to_numpy()
-            lens = np.fromiter((len(v) for v in vals), np.int64, len(vals))
-            gcounts = np.maximum(lens - (n - 1), 0)
-            keep = gcounts > 0
-            if not keep.any():
-                continue
-            flat = np.concatenate([np.asarray(v, np.int64) for v in vals])
-            offs = np.concatenate(([0], np.cumsum(lens)))[:-1]
-            gk = gcounts[keep]
-            gstarts = np.concatenate(([0], np.cumsum(gk)))[:-1]
-            idx = np.repeat(offs[keep], gk) + (
-                np.arange(int(gk.sum()), dtype=np.int64) - np.repeat(gstarts, gk)
-            )
-            g = flat[idx]
-            for j in range(1, n):
-                g = (g * ROLL_C + flat[idx + j]) % MERSENNE31
-            # signatures: k per-segment minima over the raw gram stream
-            sig = np.empty((len(gk), NUM_HASHES), np.int64)
-            for i in range(NUM_HASHES):
-                sig[:, i] = np.minimum.reduceat(
-                    (a_arr[i] * g + b_arr[i]) % MERSENNE31, gstarts
-                )
-            # distinct gram arrays: stable (segment, value) sort + run mask
-            seg = np.repeat(np.arange(len(gk), dtype=np.int64), gk)
-            order = np.lexsort((g, seg))
-            gs, ss = g[order], seg[order]
-            first = np.ones(len(gs), bool)
-            first[1:] = (gs[1:] != gs[:-1]) | (ss[1:] != ss[:-1])
-            gu, su = gs[first], ss[first]
-            counts = np.bincount(su, minlength=len(gk))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].to_numpy()[keep],
-                    "sig": list(sig),
-                    "gh_arr": np.split(gu, np.cumsum(counts)[:-1]),
-                }
-            )
-
-    return th_df.mapInPandas(
-        kernel, "doc_id long, sig array<long>, gh_arr array<long>"
-    )
+    return th_df.mapInPandas(kernel, _features_schema(want_sig, want_arr))
 
 
 # Entry cap of the fused kernels' per-task token-hash memo: high-entropy
@@ -760,193 +689,102 @@ def _md5_token_hasher(modulus: int = 1 << 60):
 def doc_text_features_arrow(
     docs: DataFrame, n: int = 3, want_sig: bool = True, want_arr: bool = True
 ) -> DataFrame:
-    """Fused text -> minhash/gram features in ONE Python pass (r17).
+    """(doc_id[, sig][, gh_arr]) from a (doc_id, text) frame in ONE
+    Python pass — the portable-md5 front half of :func:`gram_features`.
 
-    The r16 shape (``_token_hash_expr`` front half + th_arr kernel)
-    evaluated md5 + hex parse PER TOKEN OCCURRENCE in the JVM — the
+    Evaluating md5 + hex parse per token OCCURRENCE in the JVM was the
     dominant CPU of every md5-family dedup stage (curated_corpus's
     gram-checkpoint stage profiled 14.7 CPU-s at sf0.1, most of it the
-    per-occurrence md5). Here the whole front half runs inside the same
-    ``mapInPandas`` task that builds the grams: the normalize/tokenize
-    chain is the C-level Python twin the engine-equivalence property
-    tests pin (PY_NORMALIZE rule order; post-ASCII-fold tokens make
-    ``str.split()`` the WS-class split — the proven simhash-kernel
-    replica), and each DISTINCT token is md5-hashed ONCE per task
-    (vocabulary cache — corpus vocabulary is tiny next to occurrences).
+    per-occurrence md5). Here normalize/tokenize run inside the same
+    ``mapInPandas`` task that builds the grams, through the
+    :func:`PY_NORMALIZE` twin the engine-equivalence property tests pin
+    (post-ASCII-fold tokens make ``str.split()`` the WS-class split),
+    and each DISTINCT token is md5-hashed ONCE per task (corpus
+    vocabulary is tiny next to occurrences).
 
     Exactness: ``int(md5(utf8)[:15 hex], 16)`` IS
     ``conv(substring(md5(w),1,15),16,10)`` (:func:`portable_hash64`),
-    mod the same prime; the rolling-gram / affine-min numpy machinery
-    is byte-for-byte the th_arr kernels'. Bit-equality to the r16 path
-    is pytest-gated and every downstream registered query re-checks
-    against the DuckDB oracle.
-
-    NULL or sub-``n``-token docs produce no output row (the th_arr
-    kernels' ``gcounts <= 0`` drop, made explicit — a NULL text only
-    ever reached the old kernels in theory, where it would raise)."""
-    import string as _string
-
-    import numpy as np
+    mod the same prime, and the back half is :func:`_gram_back_half`.
+    Bit-equality to :func:`token_hash_features_arrow` over the JVM md5
+    front half is pytest-gated, and every downstream registered query
+    re-checks against the DuckDB oracle."""
     import pandas as pd
 
-    ws_chars = " \t\n\x0b\f\r\x1c\x1d\x1e\x1f"
-    punct_del = {ord(c): None for c in _string.punctuation}
-    a_arr = np.array(MINHASH_A, np.int64) if want_sig else None
-    b_arr = np.array(MINHASH_B, np.int64) if want_sig else None
-    if not (want_sig or want_arr):
-        raise ValueError("need at least one of want_sig/want_arr")
+    schema = _features_schema(want_sig, want_arr)
 
     def kernel(batches):
         h64 = _md5_token_hasher(MERSENNE31)
         for pdf in batches:
-            if pdf.empty:
-                continue
-            ids: list[int] = []
-            ths: list[np.ndarray] = []
-            for doc_id, t in zip(pdf["doc_id"], pdf["text"]):
-                if t is None:
-                    continue
-                norm = (
-                    t.translate(punct_del)
-                    .lower()
-                    .encode("ascii", "ignore")
-                    .decode("ascii")
-                    .strip(ws_chars)
+            ths = [
+                None if t is None
+                else np.fromiter(map(h64, PY_NORMALIZE(t).split()), np.int64)
+                for t in pdf["text"]
+            ]
+            keep, cols = _gram_back_half(ths, n, want_sig, want_arr)
+            if keep.any():
+                yield pd.DataFrame(
+                    {"doc_id": pdf["doc_id"].to_numpy()[keep], **cols}
                 )
-                toks = norm.split()
-                if len(toks) < n:
-                    continue  # no grams -> no row (gcounts<=0 parity)
-                ids.append(doc_id)
-                ths.append(
-                    np.fromiter((h64(w) for w in toks), np.int64, len(toks))
-                )
-            if not ids:
-                continue
-            # shared rolling-gram machinery (identical to the th_arr
-            # kernels above; every doc here has >= 1 gram)
-            lens = np.fromiter((len(v) for v in ths), np.int64, len(ths))
-            gk = lens - (n - 1)
-            flat = np.concatenate(ths)
-            offs = np.concatenate(([0], np.cumsum(lens)))[:-1]
-            gstarts = np.concatenate(([0], np.cumsum(gk)))[:-1]
-            idx = np.repeat(offs, gk) + (
-                np.arange(int(gk.sum()), dtype=np.int64) - np.repeat(gstarts, gk)
-            )
-            g = flat[idx]
-            for j in range(1, n):
-                g = (g * ROLL_C + flat[idx + j]) % MERSENNE31
-            out = {"doc_id": pd.Series(ids, dtype="int64")}
-            if want_sig:
-                sig = np.empty((len(gk), NUM_HASHES), np.int64)
-                for i in range(NUM_HASHES):
-                    sig[:, i] = np.minimum.reduceat(
-                        (a_arr[i] * g + b_arr[i]) % MERSENNE31, gstarts
-                    )
-                out["sig"] = list(sig)
-            if want_arr:
-                seg = np.repeat(np.arange(len(gk), dtype=np.int64), gk)
-                order = np.lexsort((g, seg))
-                gs, ss = g[order], seg[order]
-                first = np.ones(len(gs), bool)
-                first[1:] = (gs[1:] != gs[:-1]) | (ss[1:] != ss[:-1])
-                gu, su = gs[first], ss[first]
-                counts = np.bincount(su, minlength=len(gk))
-                out["gh_arr"] = np.split(gu, np.cumsum(counts)[:-1])
-            yield pd.DataFrame(out)
 
-    fields = ["doc_id long"]
-    if want_sig:
-        fields.append("sig array<long>")
-    if want_arr:
-        fields.append("gh_arr array<long>")
-    return docs.select("doc_id", "text").mapInPandas(
-        kernel, ", ".join(fields)
-    )
+    return docs.select("doc_id", "text").mapInPandas(kernel, schema)
 
 
-def doc_minhash_features(
-    spark: SparkSession, sf_dir: str, n: int = 3, fast_hash: bool = False
+def gram_features(
+    docs: DataFrame,
+    n: int = 3,
+    fast_hash: bool = False,
+    want_sig: bool = True,
+    want_arr: bool = True,
 ) -> DataFrame:
-    """(doc_id, sig, gh_arr) per document — one corpus scan, one Arrow
-    pass (see :func:`minhash_features_arrow`). The portable-md5 family
-    routes through the fused text kernel (r17,
-    :func:`doc_text_features_arrow` — md5 per DISTINCT token per task);
-    ``fast_hash`` keeps the JVM xxhash64 front half, which has no
-    Python twin."""
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    docs = ensure_parallelism(
-        docs,
-        spark.sparkContext.defaultParallelism,
-        cache_key=corpus_key(sf_dir, "documents"),
-    )
-    if fast_hash:
-        return minhash_features_arrow(
-            docs.select("doc_id", _token_hash_expr(True).alias("th_arr")), n
-        )
-    return doc_text_features_arrow(docs, n)
+    """(doc_id[, sig][, gh_arr]) per doc of a (doc_id, text) frame: the
+    k min-hashes of its n-gram fingerprints and/or their DISTINCT sorted
+    array. NULL-text and sub-``n``-token docs produce no row.
 
-
-def doc_gram_hash_arrays(
-    spark: SparkSession, sf_dir: str, n: int = 3, fast_hash: bool = False
-) -> DataFrame:
-    """(doc_id, gh_arr) DISTINCT shingle fingerprints per document — the
-    hashed replacement for :func:`doc_shingle_arrays` on every dedup
-    path (the string form remains for operators whose semantics need the
-    literal grams, e.g. decontamination overlap reporting)."""
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    docs = ensure_parallelism(
-        docs,
-        spark.sparkContext.defaultParallelism,
-        cache_key=corpus_key(sf_dir, "documents"),
-    )
-    if fast_hash:
-        return gram_hash_arrays_arrow(
-            docs.select("doc_id", _token_hash_expr(True).alias("th_arr")), n
-        )
-    # r17: portable-md5 family runs the fused text kernel (md5 per
-    # DISTINCT token per task instead of per occurrence in the JVM)
-    return doc_text_features_arrow(docs, n, want_sig=False)
-
-
-def minhash_signatures(
-    spark: SparkSession, sf_dir: str, fast_hash: bool = False
-) -> DataFrame:
-    """(doc_id, sig: array<bigint>[k]) — k independent min-hashes per doc.
-
-    ZERO-shuffle: each document is one row holding its token-hash array
-    (JVM-side md5/xxhash64 per token), and the rolling-gram combine plus
-    the k mins run in ONE vectorized Arrow kernel over the scan's own
-    partitions (:func:`minhash_signatures_arrow` — numpy segment
-    arithmetic, bit-identical to the higher-order-function form but ~20x
-    less CPU; the HOF form :func:`minhash_signatures_for` stays as the
-    cross-check reference). No explode, no groupBy: at 100 TB the
-    signature stage adds no Exchange at all, where a (doc_id, shingle)-
-    exploded groupBy formulation would shuffle k longs per doc. Empty
-    gram arrays (docs shorter than n tokens) are dropped, matching the
-    exploded/grouped semantics. (A_i*h + B_i stays under 2^62: both
-    operands < 2^31.)
+    ZERO-shuffle: one ``mapInPandas`` pass over the input's own
+    partitions, bit-identical to the higher-order-function references
+    (:func:`gram_hash_arrays_for`, :func:`minhash_signatures_for`). No
+    explode, no groupBy: at 100 TB the signature stage adds no Exchange,
+    where a (doc_id, shingle)-exploded groupBy would shuffle k longs per
+    doc.
 
     ``fast_hash=True`` swaps the portable md5 base hash for Spark's
-    xxhash64 — ~30% faster signatures, same statistical quality, but NOT
-    reproducible in DuckDB. Production/bench plans use it; the default
-    stays the portable family so the registered query remains fully
-    value-hash-checked by the oracle. Candidate sets agree for true
-    near-dups either way (asserted in tests).
-    """
+    xxhash64, computed per token in the JVM — NOT reproducible in
+    DuckDB. Production/bench plans use it; the default stays the
+    portable family (md5 per distinct token, in Python) so registered
+    queries remain fully value-hash-checked by the oracle. Candidate
+    sets agree for true near-dups either way (asserted in tests)."""
+    if fast_hash:
+        return token_hash_features_arrow(
+            docs.select("doc_id", _token_hash_expr(True).alias("th_arr")),
+            n,
+            want_sig,
+            want_arr,
+        )
+    return doc_text_features_arrow(docs, n, want_sig, want_arr)
+
+
+def doc_gram_features(
+    spark: SparkSession,
+    sf_dir: str,
+    n: int = 3,
+    fast_hash: bool = False,
+    want_sig: bool = True,
+    want_arr: bool = True,
+) -> DataFrame:
+    """:func:`gram_features` over the ``documents`` table — one corpus
+    scan, one Arrow pass. Consumers that need both the signatures (band
+    candidates) and the gram arrays (exact Jaccard verification) take
+    both from ONE call: separate passes ran the corpus scan and the
+    token hashing twice (~2.9 s of the 6.5 s
+    ``dedup_clusters(edge_source="minhash")`` wall at the sf1 stress
+    set)."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     docs = ensure_parallelism(
         docs,
         spark.sparkContext.defaultParallelism,
         cache_key=corpus_key(sf_dir, "documents"),
     )
-    if fast_hash:
-        return minhash_signatures_arrow(
-            docs.select("doc_id", _token_hash_expr(True).alias("th_arr")),
-            n=3,
-        )
-    # r17: portable-md5 family runs the fused text kernel (md5 per
-    # DISTINCT token per task instead of per occurrence in the JVM)
-    return doc_text_features_arrow(docs, n=3, want_arr=False)
+    return gram_features(docs, n, fast_hash, want_sig, want_arr)
 
 
 def _minhash_oracle() -> str:
@@ -1068,7 +906,9 @@ def dedup_minhash(
     # lets a caller supply an already-materialized (doc_id, sig)
     # relation (dedup_pair_scores' shared fused-features pass, r9).
     if sig is None:
-        sig = materialize(minhash_signatures(spark, sf_dir, fast_hash=fast_hash))
+        sig = materialize(
+            doc_gram_features(spark, sf_dir, fast_hash=fast_hash, want_arr=False)
+        )
     # repartition the candidate set before the signature re-joins (same
     # shape as near_dup_edges_minhash_verified): AQE coalesces the
     # ~10 MB candidate shuffle to 2 partitions by BYTES, but the
@@ -1119,7 +959,7 @@ def simhash_fingerprints(
     vote > 0.
 
     ``engine="arrow"`` (default, r8): ZERO-shuffle — one ``mapInPandas``
-    pass per doc runs the proven C-level normalize chain, a token
+    pass per doc runs the :func:`PY_NORMALIZE` twin, a token
     Counter, the md5 hash per DISTINCT word (cached across the batch's
     docs — the corpus vocabulary is tiny next to token occurrences) and
     the 60 votes as one numpy sign-matrix product. Replaces the
@@ -1140,10 +980,6 @@ def simhash_fingerprints(
         cache_key=corpus_key(sf_dir, "documents"),
     )
     if engine == "arrow":
-        import string as _string
-
-        ws_chars = " \t\n\x0b\f\r\x1c\x1d\x1e\x1f"
-        punct_del = {ord(c): None for c in _string.punctuation}
         n_bits = SIMHASH_BITS
 
         def kernel(batches):
@@ -1159,14 +995,8 @@ def simhash_fingerprints(
                     if t is None:
                         continue  # expr parity: explode(split(NULL))
                         # emits no (doc, word) rows -> no fingerprint
-                    norm = (
-                        t.translate(punct_del)
-                        .lower()
-                        .encode("ascii", "ignore")
-                        .decode("ascii")
-                        .strip(ws_chars)
-                    )
-                    toks = norm.split()  # pure ASCII == the WS-class split
+                    # pure ASCII after the fold: == the WS-class split
+                    toks = PY_NORMALIZE(t).split()
                     if not toks:
                         continue  # no (doc, word) rows -> no fingerprint
                     cnt = Counter(toks)
@@ -1385,15 +1215,13 @@ def near_dup_edges_minhash_verified(
     Round-7 measured fixes (this edge leg 4.7 -> 3.0 s best-of-3 at the
     sf1 stress set; the full minhash clustering 7.4 -> ~6.5 s):
     signatures + gram arrays come from ONE fused corpus pass
-    (:func:`minhash_features_arrow` — separate materializes ran the
+    (:func:`doc_gram_features` — separate materializes ran the
     tokenize/hash expression twice, ~0.9 s), and the candidate set is
     repartitioned before the verification join (~1.6 s): when the
     payload side broadcasts, no exchange re-spreads the AQE-coalesced
     band-join output, so the per-pair ``array_intersect`` was running
     on 2 tasks; the id-only repartition costs 16 bytes/pair."""
-    feats = materialize(
-        doc_minhash_features(spark, sf_dir, n=3, fast_hash=fast_hash)
-    )
+    feats = materialize(doc_gram_features(spark, sf_dir, fast_hash=fast_hash))
     cand = minhash_band_candidates(feats.select("doc_id", "sig")).repartition(
         spark.sparkContext.defaultParallelism
     )
@@ -1893,11 +1721,11 @@ def dedup_pair_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # one fused corpus pass (scan + per-token md5 + gram/signature
     # kernel) feeds BOTH the ngram and the minhash legs — separate
-    # doc_gram_hash_arrays / minhash_signatures materializes paid the
-    # scan and the JVM per-token hash twice (r9; the multi-consumer-
-    # recompute class from the r8 audit, one level up). SimHash keeps
+    # gram-array / signature materializes paid the scan and the
+    # per-token hash twice (r9; the multi-consumer-recompute class
+    # from the r8 audit, one level up). SimHash keeps
     # its own scan: its kernel hashes distinct WORDS, not gram arrays.
-    feats = materialize(doc_minhash_features(spark, sf_dir))
+    feats = materialize(doc_gram_features(spark, sf_dir))
     return (
         # "auto": this leg must run at EVERY density (tagged branch), so
         # the sampled probe picks full vs prefix-filtered per corpus —

@@ -27,6 +27,8 @@ from pyspark.sql import functions as F
 
 from gcp_map_reduce_spark.functions.text import (
     NON_WS,
+    PY_NORMALIZE,
+    WS_CHARS,
     WS_SPLIT,
     normalize_text,
     sql_normalize,
@@ -331,10 +333,10 @@ def profile_metrics_arrow(docs: DataFrame) -> DataFrame:
       whitespace set would split tokens the Java class keeps intact) and
       count via a token Counter;
     - the normalization chain (punct delete -> lower -> ASCII delete ->
-      WS-class strip) runs as C-level ``str.translate`` /
-      ``encode('ascii','ignore')`` / ``strip``; after the ASCII fold the
-      WS class equals Python's ASCII whitespace set so ``.split()`` is
-      exact (the WS_CLASS design invariant, property-tested);
+      WS-class strip) is :func:`PY_NORMALIZE`, C-level string ops; after
+      the ASCII fold the WS class equals Python's ASCII whitespace set so
+      ``.split()`` is exact (the WS_CLASS design invariant,
+      property-tested);
     - ``lower()``: Python ``str.lower()`` vs the JVM's — both implement
       Unicode simple+special lowercase; equality on the corpus is what
       the pytest gate pins (any future divergence fails loudly there).
@@ -346,9 +348,7 @@ def profile_metrics_arrow(docs: DataFrame) -> DataFrame:
     import numpy as np
     import pandas as pd
 
-    ws_chars = " \t\n\x0b\f\r\x1c\x1d\x1e\x1f"
-    ws_split_re = _re.compile("[" + ws_chars.replace("\\", "\\\\") + "]+")
-    punct_del = {ord(c): None for c in _string.punctuation}
+    ws_split_re = _re.compile("[" + WS_CHARS + "]+")
     marker_sets = {lang: set(mk) for lang, mk in LANG_MARKERS.items()}
     stop_set = set(STOPWORDS)
 
@@ -360,7 +360,7 @@ def profile_metrics_arrow(docs: DataFrame) -> DataFrame:
         for c in _string.punctuation:
             punct_tab[ord(c)] = True
         ws_tab = np.zeros(0x110000, dtype=bool)
-        for c in ws_chars:
+        for c in WS_CHARS:
             ws_tab[ord(c)] = True
         # Java \s for the BPE regex: [ \t\n\x0B\f\r] ONLY
         jss_tab = np.zeros(0x110000, dtype=bool)
@@ -413,13 +413,7 @@ def profile_metrics_arrow(docs: DataFrame) -> DataFrame:
                 for lang, mk in marker_sets.items():
                     ints[f"s_{lang}"][i] = sum(cnt[w] for w in mk)
                 ints["n_stop"][i] = sum(cnt[w] for w in stop_set)
-                norm = (
-                    t.translate(punct_del)
-                    .lower()
-                    .encode("ascii", "ignore")
-                    .decode("ascii")
-                    .strip(ws_chars)
-                )
+                norm = PY_NORMALIZE(t)
                 fps.append(hashlib.md5(norm.encode("utf-8")).hexdigest())
                 ints["n_norm_chars"][i] = len(norm)
                 toks = norm.split()  # pure ASCII: == the WS class split
@@ -598,9 +592,8 @@ def corpus_bigrams(
     """Corpus bigram statistics (occurrences + doc frequency).
 
     ``engine="arrow"`` (default, r8): one ``mapInPandas`` pass per doc —
-    the same C-level normalize chain the profile kernel proved exact
-    (punct-delete -> lower -> ASCII-fold -> WS-strip; after the fold
-    ``str.split()`` equals the WS-class split), then a bigram Counter —
+    the :func:`PY_NORMALIZE` twin (after the ASCII fold ``str.split()``
+    equals the WS-class split), then a bigram Counter —
     emitting PRE-COLLAPSED (bigram, per-doc count) partials. Downstream
     the doc-frequency is a plain ``count(*)`` (one row per (doc,
     bigram) by construction) instead of a ``count_distinct`` expansion,
@@ -642,11 +635,6 @@ def corpus_bigrams(
             F.count_distinct("doc_id").alias("n_docs"),
         )
 
-    import string as _string
-
-    ws_chars = " \t\n\x0b\f\r\x1c\x1d\x1e\x1f"
-    punct_del = {ord(c): None for c in _string.punctuation}
-
     def kernel(batches):
         from collections import Counter
 
@@ -659,14 +647,7 @@ def corpus_bigrams(
                 if t is None:
                     continue  # expr parity: explode of the NULL gram
                     # array emits no bigram rows
-                norm = (
-                    t.translate(punct_del)
-                    .lower()
-                    .encode("ascii", "ignore")
-                    .decode("ascii")
-                    .strip(ws_chars)
-                )
-                toks = norm.split()  # pure ASCII == the WS-class split
+                toks = PY_NORMALIZE(t).split()  # pure ASCII == the WS-class split
                 if len(toks) < 2:
                     continue
                 c = Counter(

@@ -31,7 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from gcp_map_reduce_spark.functions.text import sql_tokens_cte, tokenize
+from gcp_map_reduce_spark.functions.text import PY_NORMALIZE, sql_tokens_cte, tokenize
 from gcp_map_reduce_spark.operators.scale import ensure_parallelism
 from gcp_map_reduce_spark.plans.probes import corpus_key
 from gcp_map_reduce_spark.plans.registry import query
@@ -74,7 +74,7 @@ def wordcount(
       at bench scale (0.67 vs 0.75 s at sf0.1: the Arrow exchange costs
       more than the regex passes save on 5k docs);
     - ``"arrow"``: one Python pass per partition builds a token Counter
-      (the same C-level normalize chain as the ``text_profile`` kernel)
+      (the :func:`PY_NORMALIZE` twin, as in the ``text_profile`` kernel)
       and emits (word, partial_count) — the shuffle then carries one row
       per distinct word per partition, same as the JVM partial agg, but
       the 3-regex normalize + explode CPU collapses into C string ops:
@@ -89,10 +89,6 @@ def wordcount(
         )
     if engine != "arrow":
         raise ValueError(f"engine must be 'expr' or 'arrow', got {engine!r}")
-    import string as _string
-
-    ws_chars = " \t\n\x0b\f\r\x1c\x1d\x1e\x1f"
-    punct_del = {ord(c): None for c in _string.punctuation}
     docs = ensure_parallelism(
         load_table(spark, sf_dir, "documents").select("text"),
         spark.sparkContext.defaultParallelism,
@@ -109,16 +105,9 @@ def wordcount(
             for t in pdf["text"]:
                 if t is None:
                     continue  # expr parity: tokenize emits no rows
-                norm = (
-                    t.translate(punct_del)
-                    .lower()
-                    .encode("ascii", "ignore")
-                    .decode("ascii")
-                    .strip(ws_chars)
-                )
                 # post-ASCII-fold, str.split() == the explicit WS class
                 # (the WS_CLASS design invariant; see functions/text.py)
-                cnt.update(norm.split())
+                cnt.update(PY_NORMALIZE(t).split())
         if cnt:
             yield pd.DataFrame(
                 {"word": list(cnt.keys()), "pc": list(cnt.values())}

@@ -45,10 +45,8 @@ from gcp_map_reduce_spark.operators.scale import ensure_parallelism
 from gcp_map_reduce_spark.operators.dedup import (
     BANDS,
     NUM_HASHES,
-    _token_hash_expr,
-    doc_text_features_arrow,
+    gram_features,
     minhash_band_rows,
-    minhash_signatures_arrow,
 )
 
 NEAR_DUP_EST_JACCARD = 0.7  # same acceptance threshold as dedup_minhash
@@ -549,20 +547,7 @@ def run_streaming_near_dup_dedup(
             if spread_batch
             else batch_df
         )
-        # md5 family routes through the fused text kernel (r17 — md5
-        # per DISTINCT token per task, bit-equal; see dedup.py);
-        # xxhash64 keeps the JVM front half (no Python twin)
-        sigs = (
-            doc_text_features_arrow(
-                spread.select("doc_id", "text"), want_arr=False
-            )
-            if not fast_hash
-            else minhash_signatures_arrow(
-                spread.select(
-                    "doc_id", _token_hash_expr(True).alias("th_arr")
-                )
-            )
-        )
+        sigs = gram_features(spread, fast_hash=fast_hash, want_arr=False)
         if collected_accept:
             # one job: kernel + collect (the batch was already assumed
             # driver-sized — the distributed plan broadcast it 3x)

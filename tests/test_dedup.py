@@ -81,9 +81,9 @@ def test_simhash_finds_planted_dups(spark):
 
 
 def test_minhash_signatures_shape(spark):
-    from gcp_map_reduce_spark.operators.dedup import NUM_HASHES, minhash_signatures
+    from gcp_map_reduce_spark.operators.dedup import NUM_HASHES, doc_gram_features
 
-    sig = minhash_signatures(spark, "/root/testdata/sf0.001")
+    sig = doc_gram_features(spark, "/root/testdata/sf0.001", want_arr=False)
     assert sig.columns == ["doc_id", "sig"]
     row = sig.limit(1).collect()[0]
     assert len(row["sig"]) == NUM_HASHES
@@ -96,8 +96,8 @@ def test_minhash_arrow_kernel_bit_identical_to_hof(spark):
     min arithmetic in numpy int64) — the oracle's value-hash gate rides
     on this equivalence."""
     from gcp_map_reduce_spark.operators.dedup import (
+        doc_gram_features,
         gram_hash_arrays_for,
-        minhash_signatures,
         minhash_signatures_for,
     )
     from gcp_map_reduce_spark.sources.tables import load_table
@@ -108,7 +108,7 @@ def test_minhash_arrow_kernel_bit_identical_to_hof(spark):
         ref = minhash_signatures_for(
             gram_hash_arrays_for(docs, n=3, fast_hash=fast)
         )
-        got = minhash_signatures(spark, d, fast_hash=fast)
+        got = doc_gram_features(spark, d, fast_hash=fast, want_arr=False)
         assert ref.exceptAll(got).count() == 0
         assert got.exceptAll(ref).count() == 0
 
@@ -118,25 +118,25 @@ def test_minhash_fused_features_kernel_matches_single_kernels(spark):
     must reproduce the two single-purpose kernels column-for-column —
     one corpus pass replaces two, and this gate is what makes the fusion
     safe to keep."""
-    from gcp_map_reduce_spark.operators.dedup import (
-        doc_gram_hash_arrays,
-        doc_minhash_features,
-        minhash_signatures,
-    )
+    from gcp_map_reduce_spark.operators.dedup import doc_gram_features
 
     d = "/root/testdata/sf0.01"
     for fast in (False, True):
         feats = {
             r.doc_id: (tuple(r.sig), tuple(r.gh_arr))
-            for r in doc_minhash_features(spark, d, fast_hash=fast).collect()
+            for r in doc_gram_features(spark, d, fast_hash=fast).collect()
         }
         sig = {
             r.doc_id: tuple(r.sig)
-            for r in minhash_signatures(spark, d, fast_hash=fast).collect()
+            for r in doc_gram_features(
+                spark, d, fast_hash=fast, want_arr=False
+            ).collect()
         }
         arrs = {
             r.doc_id: tuple(r.gh_arr)
-            for r in doc_gram_hash_arrays(spark, d, fast_hash=fast).collect()
+            for r in doc_gram_features(
+                spark, d, fast_hash=fast, want_sig=False
+            ).collect()
         }
         assert feats and set(feats) == set(sig) == set(arrs)
         for k, (s, g) in feats.items():
@@ -278,13 +278,13 @@ def test_fused_text_kernel_bit_equal_to_expr_front_half(spark):
     from gcp_map_reduce_spark.operators.dedup import (
         _token_hash_expr,
         doc_text_features_arrow,
-        minhash_features_arrow,
+        token_hash_features_arrow,
     )
     from gcp_map_reduce_spark.sources.tables import load_table
     from tests.conftest import SF_ORACLE
 
     docs = load_table(spark, SF_ORACLE, "documents").select("doc_id", "text")
-    old = minhash_features_arrow(
+    old = token_hash_features_arrow(
         docs.select("doc_id", _token_hash_expr(False).alias("th_arr")), 3
     )
     new = doc_text_features_arrow(docs, 3)
@@ -306,8 +306,8 @@ def test_fused_kernels_bit_equal_past_token_memo_cap(spark, tmp_path):
         TOKEN_HASH_MEMO_MAX,
         _token_hash_expr,
         doc_text_features_arrow,
-        minhash_features_arrow,
         simhash_fingerprints,
+        token_hash_features_arrow,
     )
 
     # simhash fans a one-file corpus out round-robin over the default
@@ -337,7 +337,7 @@ def test_fused_kernels_bit_equal_past_token_memo_cap(spark, tmp_path):
     assert len(a) == n_docs and a == b
 
     docs = spark.read.parquet(sf_dir + "/documents.parquet").coalesce(1)
-    old = minhash_features_arrow(
+    old = token_hash_features_arrow(
         docs.select("doc_id", _token_hash_expr(False).alias("th_arr")), 3
     )
     new = doc_text_features_arrow(docs, 3)

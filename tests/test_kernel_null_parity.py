@@ -91,3 +91,16 @@ def test_text_profile_null_parity(spark, null_docs_dir):
     a = _rows(text_profile(spark, null_docs_dir, engine="expr"))
     b = _rows(text_profile(spark, null_docs_dir, engine="arrow"))
     assert a == b and len(a) == len(TEXTS)
+
+
+def test_gram_features_null_parity(spark, null_docs_dir):
+    """Both hash front halves skip NULL-text and sub-n-token docs: the
+    JVM xxhash64 token-hash array of a NULL text is NULL, not empty."""
+    from gcp_map_reduce_spark.operators.dedup import gram_features
+
+    docs = spark.read.parquet(os.path.join(null_docs_dir, "documents.parquet"))
+    ids = [
+        {r.doc_id for r in gram_features(docs, fast_hash=fast).collect()}
+        for fast in (False, True)
+    ]
+    assert ids == [{0, 2}, {0, 2}]
