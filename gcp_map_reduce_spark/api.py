@@ -218,8 +218,17 @@ def create_app(
                                   "duplicate — query_id must be unique "
                                   "within a request"}
                     ), 400
+                vals = [float(x) for x in emb]
+                if not any(x * x for x in vals):
+                    # zero squared norm (all zeros, or squares that
+                    # underflow): the cosine dot / sqrt(qn2 * n2) would
+                    # divide by zero, a Spark error under ANSI mode
+                    return jsonify(
+                        {"error": f"queries[{i}].embedding has zero norm "
+                                  "— cosine is undefined for it"}
+                    ), 400
                 seen_ids.add(qid)
-                parsed.append((qid, [float(x) for x in emb]))
+                parsed.append((qid, vals))
             qdf = spark.createDataFrame(
                 parsed, "query_id long, embedding array<double>"
             )

@@ -98,6 +98,9 @@ from gcp_map_reduce_spark.operators.similarity import (
     TOP_K,
     _dot,
     _emb,
+    _np_dot,
+    _np_nearest,
+    _np_row_dot,
     _with_norm2,
     ivf_dedup_n_cells,
     ivf_probe_cells,
@@ -565,30 +568,6 @@ def _sweep_stale_generations(
             continue  # live writer owns it — not stale, skip this pass
 
 
-def _np_n2(E):
-    """Squared L2 norms via the d-sequential fold (the module's shared
-    accumulation order)."""
-    import numpy as np
-
-    n2 = np.zeros(E.shape[0], dtype=np.float64)
-    for d in range(E.shape[1]):
-        n2 += E[:, d] * E[:, d]
-    return n2
-
-
-def _np_nearest(E, En2, cell_ids, C, Cn2, k: int):
-    """Column indices of each row's ``k`` nearest codebook rows by
-    squared L2 distance ``(n2 - 2*dot) + cn2`` with the (d, cell_id)
-    tie-break — the one distance definition every two-level path
-    (build, append, probe) shares, so they cannot disagree."""
-    import numpy as np
-
-    dist = (En2[:, None] - 2.0 * _seq_dot(E, C)) + Cn2[None, :]
-    return np.lexsort(
-        (np.broadcast_to(cell_ids, dist.shape), dist), axis=1
-    )[:, :k]
-
-
 def _np_assign_2l(E, cb2l):
     """Composite home cell ids for rows ``E`` under a two-level
     codebook: nearest coarse centroid, then nearest residual centroid
@@ -596,10 +575,10 @@ def _np_assign_2l(E, cb2l):
     import numpy as np
 
     ids1, C1, C1n2, ids2, C2, C2n2, k2 = cb2l
-    n2 = _np_n2(E)
+    n2 = _np_row_dot(E, E)
     i1 = _np_nearest(E, n2, ids1, C1, C1n2, 1)[:, 0]
     R = E - C1[i1]
-    rn2 = _np_n2(R)
+    rn2 = _np_row_dot(R, R)
     i2 = _np_nearest(R, rn2, ids2, C2, C2n2, 1)[:, 0]
     return ids1[i1] * np.int64(k2) + ids2[i2], n2
 
@@ -648,13 +627,13 @@ def _assign_cells(
     CodegenFallback — ~n_cells x d interpreted ops per row, the build
     bottleneck once n_cells grows with the corpus. ``"arrow"`` collects
     the codebook once (bounded: <= IVF_DEDUP_CELLS_CAP x d doubles, the
-    same 32 MB broadcast ceiling) and assigns per Arrow batch with the
-    d-sequential numpy fold — bit-identical distances and (d, cell_id)
-    tie-breaks to the expression path (the ``_probes_driver`` arithmetic,
-    pytest-gated), at GEMM speed. ``"auto"`` picks arrow above
-    ARROW_ASSIGN_MIN_CELLS — measured builds, best-of-3: 94 cells/60k
-    rows 12.3 s plan vs 4.3 s arrow (2.8x); 4 cells/2k rows 2.5 s plan
-    vs 4.8 s arrow (the Arrow exchange costs more than the small fold).
+    same 32 MB broadcast ceiling) and assigns per Arrow batch with
+    ``_np_nearest`` — bit-identical distances and (d, cell_id)
+    tie-breaks to the expression path (pytest-gated), at GEMM speed.
+    ``"auto"`` picks arrow above ARROW_ASSIGN_MIN_CELLS — measured
+    builds, best-of-3: 94 cells/60k rows 12.3 s plan vs 4.3 s arrow
+    (2.8x); 4 cells/2k rows 2.5 s plan vs 4.8 s arrow (the Arrow
+    exchange costs more than the small fold).
     """
     if assign_side == "auto":
         n_seed = n_cells if n_cells is not None else seeds.count()
@@ -836,11 +815,11 @@ def _build_two_level(
     n_cells2 = min(n_cells2, len(seed_rows) - n_cells1)
     S = np.array([r.embedding for r in seed_rows], dtype=np.float64)
     C1, S2 = S[:n_cells1], S[n_cells1 : n_cells1 + n_cells2]
-    C1n2 = _np_n2(C1)
+    C1n2 = _np_row_dot(C1, C1)
     ids1 = np.arange(n_cells1, dtype=np.int64)
-    i1 = _np_nearest(S2, _np_n2(S2), ids1, C1, C1n2, 1)[:, 0]
+    i1 = _np_nearest(S2, _np_row_dot(S2, S2), ids1, C1, C1n2, 1)[:, 0]
     C2 = S2 - C1[i1]
-    C2n2 = _np_n2(C2)
+    C2n2 = _np_row_dot(C2, C2)
     ids2 = np.arange(n_cells2, dtype=np.int64)
     cb2l = (ids1, C1, C1n2, ids2, C2, C2n2, n_cells2)
 
@@ -1492,13 +1471,13 @@ def _append_collected(
 ) -> dict:
     """Driver-centric append (the streaming triggers' pattern,
     streaming/embedding_near_dup.py): collect the batch once, assign in
-    numpy against the session-cached codebook (``_seq_dot`` +
-    ``lexsort`` — the arithmetic ``_probes_driver`` already pins
-    bit-identical to the plan), dup-check against the per-cell ids
-    mirror (cold cells fetched by ONE cell-pruned ids-only scan of the
-    batch's home cells — PartitionFilters on every segment leg, so the
-    check's read scales with the batch's cells, never ``n_vec``; warm
-    cells cost zero jobs), write the segment. Two Spark jobs per cold
+    numpy against the session-cached codebook (``_np_nearest`` — the
+    ranking ``_probes_driver`` already pins bit-identical to the plan),
+    dup-check against the per-cell ids mirror (cold cells fetched by
+    ONE cell-pruned ids-only scan of the batch's home cells —
+    PartitionFilters on every segment leg, so the check's read scales
+    with the batch's cells, never ``n_vec``; warm cells cost zero
+    jobs), write the segment. Two Spark jobs per cold
     append, one per warm — the difference between 148 and
     streaming-worthy trigger rates. Contract: batches that fit on the
     driver (a micro-batch, by construction); driver memory is bounded
@@ -1512,7 +1491,7 @@ def _append_collected(
     if pdf["vec_id"].duplicated().any():
         raise ValueError("append batch contains duplicate vec_ids")
     E = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-    n2 = _np_n2(E)
+    n2 = _np_row_dot(E, E)
     if meta["levels"] == 2:
         home, _ = _np_assign_2l(
             E, _codebook_2l_driver(spark, index_dir, meta)
@@ -1595,7 +1574,7 @@ def _append_collected(
             [int(c) for c in row] for row in codes.astype(np.int64)
         ]
         out["scale"] = scale
-        out["n2"] = _np_n2(decoded)
+        out["n2"] = _np_row_dot(decoded, decoded)
         schema = StructType(
             [
                 StructField("vec_id", LongType()),
@@ -2343,7 +2322,7 @@ def _probes_driver_2l(
             [], "query_id long, qe array<double>, qn2 double, cell_id long"
         ), []
     Q = np.array([r.embedding for r in qrows], dtype=np.float64)
-    qn2 = _np_n2(Q)
+    qn2 = _np_row_dot(Q, Q)
     p1 = min(n_probe, len(ids1))
     p2 = min(n_probe2, len(ids2))
     i1 = _np_nearest(Q, qn2, ids1, C1, C1n2, p1)
@@ -2353,7 +2332,7 @@ def _probes_driver_2l(
     # GEMMs, the driver-side bottleneck at the contract's
     # thousands-of-searches rate)
     R = np.repeat(Q, p1, axis=0) - C1[i1.reshape(-1)]
-    i2 = _np_nearest(R, _np_n2(R), ids2, C2, C2n2, p2)
+    i2 = _np_nearest(R, _np_row_dot(R, R), ids2, C2, C2n2, p2)
     coarse = ids1[i1.reshape(-1)]
     qes = [[float(x) for x in row] for row in Q]  # once per query
     out = []
@@ -2371,18 +2350,6 @@ def _probes_driver_2l(
             )
     probes = _probes_rel(spark, out)
     return probes, sorted({row[3] for row in out})
-
-
-def _seq_dot(A, B):
-    """d-sequential left-fold dot of every row pair (A[i], B[j]) —
-    bit-identical to the JVM ``_dot`` fold and the Arrow kernels (same
-    per-element accumulation order; see similarity._cosine_arrow)."""
-    import numpy as np
-
-    acc = np.zeros((A.shape[0], B.shape[0]), dtype=np.float64)
-    for d in range(A.shape[1]):
-        acc += A[:, d][:, None] * B[:, d][None, :]
-    return acc
 
 
 def _probes_rel(spark: SparkSession, out: list) -> DataFrame:
@@ -2413,10 +2380,9 @@ def _probes_driver(
     batch (broadcast-small by contract) against the cached codebook:
     zero Spark jobs per search for assignment, and the probed-cell set
     falls out for free. Returns ``(probes_df, sorted probed cell ids)``.
-    Arithmetic mirrors ``ivf_probe_cells`` exactly — ``(n2 - 2*dot) +
-    cn2`` in doubles with the d-sequential fold, ties on cell_id —
-    asserted bit-identical to the plan-side path in
-    ``tests/test_ann_index.py``."""
+    Ranking is :func:`_np_nearest`, the numpy twin of
+    ``ivf_probe_cells`` — asserted bit-identical to the plan-side path
+    in ``tests/test_ann_index.py``."""
     import numpy as np
 
     cell_ids, CE, CN2 = _codebook_driver(spark, index_dir)
@@ -2425,19 +2391,15 @@ def _probes_driver(
         return spark.createDataFrame(
             [], "query_id long, qe array<double>, qn2 double, cell_id long"
         ), []
-    qids = [r.query_id for r in qrows]
     Q = np.array([r.embedding for r in qrows], dtype=np.float64)
-    # n2 via the same sequential fold (d loop), not np.dot's pairwise sum
-    qn2 = _np_n2(Q)
-    dist = (qn2[:, None] - 2.0 * _seq_dot(Q, CE)) + CN2[None, :]
-    out = []
-    for i, qid in enumerate(qids):
-        order = np.lexsort((cell_ids, dist[i]))[:n_probe]
-        for j in order:
-            out.append(
-                (int(qid), [float(x) for x in Q[i]], float(qn2[i]),
-                 int(cell_ids[j]))
-            )
+    qn2 = _np_row_dot(Q, Q)
+    nearest = _np_nearest(Q, qn2, cell_ids, CE, CN2, n_probe)
+    out = [
+        (int(r.query_id), [float(x) for x in Q[i]], float(qn2[i]),
+         int(cell_ids[j]))
+        for i, r in enumerate(qrows)
+        for j in nearest[i]
+    ]
     probes = _probes_rel(spark, out)
     return probes, sorted({row[3] for row in out})
 
@@ -2749,14 +2711,11 @@ def ann_index_screen_batch(
             )
         Q = np.stack(q["e"].to_numpy()).astype(np.float64)
         V = np.stack(v["e"].to_numpy()).astype(np.float64)
-        # the module's ONE shared d-sequential fold (_seq_dot) — the
-        # same definition the driver probes and the JVM _dot expression
-        # pin bit-identical, so the SQL oracle stays exact with no
-        # fourth hand copy of the accumulation order to drift
-        acc = _seq_dot(Q, V)
+        # similarity._np_dot: the numpy twin of the JVM _dot fold, so
+        # the SQL oracle stays exact
         qn2 = q["n2"].to_numpy(dtype=np.float64)
         vn2 = v["n2"].to_numpy(dtype=np.float64)
-        cos = acc / np.sqrt(qn2[:, None] * vn2[None, :])
+        cos = _np_dot(Q, V) / np.sqrt(qn2[:, None] * vn2[None, :])
         qi = q["id"].to_numpy(dtype=np.int64)
         vi = v["id"].to_numpy(dtype=np.int64)
         qm = np.broadcast_to(qi[:, None], cos.shape)
@@ -2785,7 +2744,7 @@ def _probe_cells_2l_plan(
     ``n_probe x n_probe2`` composite probe-cell ARRAY — computed PER
     ARROW BATCH in the plan: the distributed twin of
     :func:`_probes_driver_2l`, built from the same ``_np_nearest`` /
-    ``_np_n2`` primitives so composite probe ranking cannot drift
+    ``_np_row_dot`` primitives so composite probe ranking cannot drift
     between the driver and plan paths. Pre-explode on purpose: the
     screen pins this relation, and an array row stores each embedding
     once where exploded rows would store it rep times."""
@@ -2812,7 +2771,7 @@ def _probe_cells_2l_plan(
             qn2 = pdf["n2"].to_numpy(dtype=np.float64)
             i1 = _np_nearest(Q, qn2, ids1, C1, C1n2, p1)
             R = np.repeat(Q, p1, axis=0) - C1[i1.reshape(-1)]
-            i2 = _np_nearest(R, _np_n2(R), ids2, C2, C2n2, p2)
+            i2 = _np_nearest(R, _np_row_dot(R, R), ids2, C2, C2n2, p2)
             coarse = ids1[i1.reshape(-1)]
             comps = (
                 coarse[:, None] * np.int64(k2) + ids2[i2]

@@ -77,6 +77,52 @@ def _with_norm2(df: DataFrame) -> DataFrame:
     return df.withColumn("e", e).withColumn("n2", _dot(F.col("e"), F.col("e")))
 
 
+# -- the numpy twin of _dot ------------------------------------------------
+# Every Python path folds through these two functions, so each cell
+# accumulates a[d]*b[d] for d = 0..D-1 from 0.0 — the operand order of
+# ``_dot`` and ``_SQL_DOT`` — and stays bit-identical to both. Never a
+# BLAS matmul: its blocked/FMA summation breaks that parity. Inputs are
+# float64 arrays (cast before the call, as the expression form does).
+_NP_DOT_CHUNK = 256
+
+
+def _np_dot(A, B):
+    """All-pairs (n, m) fold: cell (i, j) = dot(A[i], B[j]). Rows of
+    ``A`` go in 256-row chunks so the accumulator and the outer-product
+    temporary stay cache-resident across the d loop (2x single-threaded,
+    measured on 1536-row tiles). Chunking changes which cells are
+    computed when, never any cell's fold."""
+    acc = np.empty((A.shape[0], B.shape[0]), dtype=np.float64)
+    for lo in range(0, A.shape[0], _NP_DOT_CHUNK):
+        Ach = A[lo:lo + _NP_DOT_CHUNK]
+        sub = np.zeros((Ach.shape[0], B.shape[0]), dtype=np.float64)
+        for d in range(A.shape[1]):
+            sub += Ach[:, d][:, None] * B[:, d][None, :]
+        acc[lo:lo + _NP_DOT_CHUNK] = sub
+    return acc
+
+
+def _np_row_dot(A, B):
+    """Row-paired fold: out[i] = dot(A[i], B[i]); ``_np_row_dot(E, E)``
+    is the squared L2 norm of every row."""
+    acc = np.zeros(A.shape[0], dtype=np.float64)
+    for d in range(A.shape[1]):
+        acc += A[:, d] * B[:, d]
+    return acc
+
+
+def _np_nearest(E, En2, cell_ids, C, Cn2, k: int):
+    """Column indices of each row's ``k`` nearest codebook rows by
+    squared L2 distance ``(n2 - 2*dot) + cn2`` with the (d, cell_id)
+    tie-break — the numpy twin of :func:`ivf_probe_cells`, shared by
+    every driver- and kernel-side assignment (ANN index build, append
+    and probes; the embedding stream) so they cannot disagree."""
+    dist = (En2[:, None] - 2.0 * _np_dot(E, C)) + Cn2[None, :]
+    return np.lexsort(
+        (np.broadcast_to(cell_ids, dist.shape), dist), axis=1
+    )[:, :k]
+
+
 @F.pandas_udf(DoubleType())
 def _cosine_arrow(ae, be, an2, bn2):
     """Vectorized pair cosine: dot(ae, be) / sqrt(an2 * bn2), 0-ulp
@@ -90,11 +136,7 @@ def _cosine_arrow(ae, be, an2, bn2):
 
     if len(ae) == 0:
         return pd.Series([], dtype="float64")
-    e1 = np.stack(ae.to_numpy())
-    e2 = np.stack(be.to_numpy())
-    acc = np.zeros(len(ae), dtype=np.float64)
-    for d in range(e1.shape[1]):
-        acc = acc + e1[:, d] * e2[:, d]
+    acc = _np_row_dot(np.stack(ae.to_numpy()), np.stack(be.to_numpy()))
     return pd.Series(acc / np.sqrt(an2.to_numpy() * bn2.to_numpy()))
 
 
@@ -640,6 +682,55 @@ def choose_embedding_payload(
     return choice
 
 
+_PAIR_SCHEMA = "vec_a long, vec_b long, cosine double"
+
+
+def _block_pair_cosines(pdf, same_block: bool, threshold: float,
+                        band_ok=None):
+    """One grouped-map task of the blocked near-dup GEMM (the tiles and
+    IVF-cell plans): the cosine of every (a, b) row pair of ``pdf`` via
+    :func:`_np_dot`, emitting ``(vec_a, vec_b, cosine)`` for pairs with
+    ``cosine >= threshold`` (and ``band_ok(a, b)``, when given).
+
+    ``same_block``: both sides are all of ``pdf``, so only the strict
+    upper triangle emits — each unordered pair once, no self-pair.
+    Otherwise ``is_a`` splits ``pdf`` into two disjoint hash blocks, in
+    which every unordered pair appears exactly once. Either way ids are
+    emitted canonically as (min, max): the cosine is bitwise
+    side-symmetric, since per-term products commute."""
+    import pandas as pd
+
+    if same_block:
+        a = b = pdf
+    else:
+        a = pdf[pdf["is_a"]]
+        b = pdf[~pdf["is_a"]]
+    if len(a) == 0 or len(b) == 0:
+        return pd.DataFrame(
+            {"vec_a": pd.Series(dtype="int64"),
+             "vec_b": pd.Series(dtype="int64"),
+             "cosine": pd.Series(dtype="float64")}
+        )
+    an2 = a["n2"].to_numpy(dtype=np.float64)
+    bn2 = b["n2"].to_numpy(dtype=np.float64)
+    cos = _np_dot(np.stack(a["e"].to_numpy()), np.stack(b["e"].to_numpy()))
+    cos /= np.sqrt(an2[:, None] * bn2[None, :])
+    keep = cos >= threshold
+    if band_ok is not None:
+        keep &= band_ok(a, b)
+    ia = a["vec_id"].to_numpy(dtype=np.int64)
+    ib = b["vec_id"].to_numpy(dtype=np.int64)
+    ia_m = np.broadcast_to(ia[:, None], cos.shape)
+    ib_m = np.broadcast_to(ib[None, :], cos.shape)
+    if same_block:
+        keep &= ia_m < ib_m
+    return pd.DataFrame(
+        {"vec_a": np.minimum(ia_m, ib_m)[keep],
+         "vec_b": np.maximum(ia_m, ib_m)[keep],
+         "cosine": cos[keep]}
+    )
+
+
 def _dedup_embedding_tiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Blocked-GEMM form of :func:`dedup_embedding_cosine` — the plan for
     the DEGENERATE-density regime, where banding stops pruning.
@@ -658,12 +749,12 @@ def _dedup_embedding_tiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     (each vector replicated once per partner block) instead of
     candidate-pairs x payload.
 
-    Bit-exactness vs the id-join plan and the SQL oracle: the accumulator
-    runs ``acc += A[:, d][:, None] * B[:, d][None, :]`` — every (i, j)
-    cell sees the identical d-sequential operand order as
-    ``_cosine_arrow``'s left fold, and min/max id emission is safe
-    because per-term products commute bitwise. The band mask is the same
-    8x2-bit agreement on the same sketches. Equality is pytest-gated.
+    Bit-exactness vs the id-join plan and the SQL oracle: each task is
+    :func:`_block_pair_cosines`, whose cosines come from
+    :func:`_np_dot` — the same d-sequential fold as ``_dot`` and
+    ``_cosine_arrow`` — and min/max id emission is safe because
+    per-term products commute bitwise. The band mask is the same 8x2-bit
+    agreement on the same sketches. Equality is pytest-gated.
 
     Each unordered pair lands in exactly ONE tile (the (min, max) of the
     two members' block ids), so no dropDuplicates is needed.
@@ -676,13 +767,6 @@ def _dedup_embedding_tiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     sampled-density decision as ``choose_edge_source``.
     """
     import math
-
-    from pyspark.sql.types import (
-        DoubleType as _D,
-        LongType as _L,
-        StructField as _SF,
-        StructType as _ST,
-    )
 
     # block count from a metadata-only parquet count — feats then has a
     # single consumer (the tile fan-out), so nothing fat is checkpointed
@@ -720,84 +804,25 @@ def _dedup_embedding_tiles(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
 
-    out_schema = _ST(
-        [
-            _SF("vec_a", _L()),
-            _SF("vec_b", _L()),
-            _SF("cosine", _D()),
-        ]
-    )
+    def band_ok(a, b):
+        x = (
+            a["sketch"].to_numpy(dtype=np.int64)[:, None]
+            ^ b["sketch"].to_numpy(dtype=np.int64)[None, :]
+        )
+        ok = np.zeros(x.shape, dtype=bool)
+        for bnd in range(DEDUP_BANDS):
+            ok |= ((x >> (bnd * band_bits)) & mask) == 0
+        return ok
 
     def tile_kernel(key, pdf):  # no hints: pyspark infers the
         # grouped-map eval type from the schema= argument; partial or
         # string hints emit (soon: raise) TYPE_HINT warnings
-        import pandas as pd
-
         ti, tj = key
-        if ti == tj:
-            a = pdf
-            b = pdf
-        else:
-            a = pdf[pdf["is_a"]]
-            b = pdf[~pdf["is_a"]]
-        if len(a) == 0 or len(b) == 0:
-            return pd.DataFrame(
-                {"vec_a": pd.Series(dtype="int64"),
-                 "vec_b": pd.Series(dtype="int64"),
-                 "cosine": pd.Series(dtype="float64")}
-            )
-        A = np.stack(a["e"].to_numpy())
-        B = np.stack(b["e"].to_numpy())
-        # d-sequential fold in ROW CHUNKS (r9): the naive full-tile loop
-        # streams the 1536x1536 accumulator + a same-size outer-product
-        # temp through memory once per dim; a 256-row chunk keeps both
-        # L2-resident across the d loop. Measured 2x single-threaded;
-        # under local[32]'s 32 concurrent tile tasks the SOCKET
-        # bandwidth is the shared ceiling and the A/B is a wash (7.98
-        # vs 8.19 s floors, within noise) — kept because per-task cache
-        # locality is the right posture for real executors running 4-8
-        # tasks each, and it costs nothing here. Bit-identical by
-        # construction — each (i, j) element still accumulates
-        # A[i,d]*B[j,d] for d = 0..D-1 in the same order (asserted
-        # elementwise == in the r9 prototype); chunking only changes
-        # WHICH elements are computed when, never an element's fold.
-        acc = np.empty((len(a), len(b)), dtype=np.float64)
-        _CH = 256
-        for lo in range(0, len(a), _CH):
-            hi = min(lo + _CH, len(a))
-            Ach = A[lo:hi]
-            sub = np.zeros((hi - lo, len(b)), dtype=np.float64)
-            for d in range(A.shape[1]):
-                sub += Ach[:, d][:, None] * B[:, d][None, :]
-            acc[lo:hi] = sub
-        an2 = a["n2"].to_numpy(dtype=np.float64)
-        bn2 = b["n2"].to_numpy(dtype=np.float64)
-        cos = acc / np.sqrt(an2[:, None] * bn2[None, :])
-        ska = a["sketch"].to_numpy(dtype=np.int64)
-        skb = b["sketch"].to_numpy(dtype=np.int64)
-        x = ska[:, None] ^ skb[None, :]
-        band_ok = np.zeros(x.shape, dtype=bool)
-        for bnd in range(DEDUP_BANDS):
-            band_ok |= ((x >> (bnd * band_bits)) & mask) == 0
-        ia = a["vec_id"].to_numpy(dtype=np.int64)
-        ib = b["vec_id"].to_numpy(dtype=np.int64)
-        ia_m = np.broadcast_to(ia[:, None], cos.shape)
-        ib_m = np.broadcast_to(ib[None, :], cos.shape)
-        keep = band_ok & (cos >= threshold)
-        if ti == tj:
-            # both sides are the same rows: keep the strict upper
-            # triangle so each unordered pair (and no self-pair) emits once
-            keep &= ia_m < ib_m
-        # cross tiles: sides come from disjoint blocks, every unordered
-        # pair appears exactly once — emit canonical (min, max) ids
-        # (cosine is bitwise side-symmetric: per-term products commute)
-        va = np.minimum(ia_m, ib_m)[keep]
-        vb = np.maximum(ia_m, ib_m)[keep]
-        return pd.DataFrame(
-            {"vec_a": va, "vec_b": vb, "cosine": cos[keep]}
-        )
+        return _block_pair_cosines(pdf, ti == tj, threshold, band_ok)
 
-    return rep.groupBy("ti", "tj").applyInPandas(tile_kernel, schema=out_schema)
+    return rep.groupBy("ti", "tj").applyInPandas(
+        tile_kernel, schema=_PAIR_SCHEMA
+    )
 
 
 def ivf_probe_cells(n_probe: int) -> Column:
@@ -894,13 +919,6 @@ def embedding_near_dup_pairs_ivf(
     """
     import math
 
-    from pyspark.sql.types import (
-        DoubleType as _D,
-        LongType as _L,
-        StructField as _SF,
-        StructType as _ST,
-    )
-
     n_vec = corpus_vec_count(spark, sf_dir)
     if n_cells is None:
         # r12: probe-scaled codebook — n_cells grows with the corpus
@@ -964,63 +982,17 @@ def embedding_near_dup_pairs_ivf(
         )
     )
 
-    out_schema = _ST(
-        [_SF("vec_a", _L()), _SF("vec_b", _L()), _SF("cosine", _D())]
-    )
     threshold = NEAR_DUP_COSINE
 
     def cell_kernel(key, pdf):  # no hints (see tile_kernel)
-        import pandas as pd
-
+        # a pair sharing both probed cells emits from each with
+        # bit-identical cosines; the outer dropDuplicates collapses them
         _cell, ti, tj = key
-        if ti == tj:
-            a = b = pdf
-        else:
-            a = pdf[pdf["is_a"]]
-            b = pdf[~pdf["is_a"]]
-        if len(a) == 0 or len(b) == 0:
-            return pd.DataFrame(
-                {"vec_a": pd.Series(dtype="int64"),
-                 "vec_b": pd.Series(dtype="int64"),
-                 "cosine": pd.Series(dtype="float64")}
-            )
-        A = np.stack(a["e"].to_numpy())
-        B = np.stack(b["e"].to_numpy())
-        # same d-sequential chunked fold as the tiles kernel — an
-        # emitted cosine is bit-identical in whichever cell computes it,
-        # which is what makes the cross-probe dropDuplicates safe
-        acc = np.empty((len(a), len(b)), dtype=np.float64)
-        _CH = 256
-        for lo in range(0, len(a), _CH):
-            hi = min(lo + _CH, len(a))
-            Ach = A[lo:hi]
-            sub = np.zeros((hi - lo, len(b)), dtype=np.float64)
-            for d in range(A.shape[1]):
-                sub += Ach[:, d][:, None] * B[:, d][None, :]
-            acc[lo:hi] = sub
-        an2 = a["n2"].to_numpy(dtype=np.float64)
-        bn2 = b["n2"].to_numpy(dtype=np.float64)
-        cos = acc / np.sqrt(an2[:, None] * bn2[None, :])
-        ia = a["vec_id"].to_numpy(dtype=np.int64)
-        ib = b["vec_id"].to_numpy(dtype=np.int64)
-        ia_m = np.broadcast_to(ia[:, None], cos.shape)
-        ib_m = np.broadcast_to(ib[None, :], cos.shape)
-        keep = cos >= threshold
-        if ti == tj:
-            # both sides are the same rows: strict upper triangle so each
-            # unordered pair (and no self-pair) emits once per cell
-            keep &= ia_m < ib_m
-        # ti != tj: sides are disjoint hash blocks, every unordered pair
-        # appears exactly once in this task — emit canonical (min, max);
-        # cross-CELL repeats (a pair sharing both probed cells) are
-        # collapsed by the outer dropDuplicates
-        va = np.minimum(ia_m, ib_m)[keep]
-        vb = np.maximum(ia_m, ib_m)[keep]
-        return pd.DataFrame({"vec_a": va, "vec_b": vb, "cosine": cos[keep]})
+        return _block_pair_cosines(pdf, ti == tj, threshold)
 
     return (
         rep.groupBy("cell_id", "ti", "tj")
-        .applyInPandas(cell_kernel, schema=out_schema)
+        .applyInPandas(cell_kernel, schema=_PAIR_SCHEMA)
         .dropDuplicates(["vec_a", "vec_b"])
     )
 
@@ -1309,7 +1281,6 @@ def ann_screen_recent_half(spark: SparkSession, sf_dir: str) -> DataFrame:
 def similarity_ivf_ann(
     spark: SparkSession,
     sf_dir: str,
-    rerank: str = "expr",
     codebook: str = "sampled",
     kmeans_iters: int = 2,
 ) -> DataFrame:
@@ -1345,16 +1316,6 @@ def similarity_ivf_ann(
     any corpus size; see the inline rationale), touching only probed
     cells' rows. At scale, raise K and let AQE split any residual hot
     cells.
-
-    ``rerank`` selects the candidate-cosine implementation: ``"expr"``
-    (default) is the JVM expression fold; ``"arrow"`` is the
-    ``_cosine_arrow`` kernel. Both are bit-identical (module docstring);
-    the default is measured, not assumed — the IVF candidate set is
-    probe-bounded (|Q| x nprobe cells), so the Arrow exchange costs more
-    than the fold saves here: expr 0.82 s vs arrow 1.05 s best-of-5 at
-    sf0.1, identical rows (the SCALING.md kernel-boundary rule applied
-    to this path; round-6 had switched it to the kernel without
-    measuring, a +20% drift this adjudication reversed).
     """
     # tiny legs (seeds, probes) pre-filter the scan so pushdown keeps
     # them O(K) rows; the corpus leg stays expression-form — IVF's
@@ -1363,8 +1324,6 @@ def similarity_ivf_ann(
     # adding the Python stage regressed 0.85 -> 1.5 s), and moving the
     # assignment itself into Python would need a driver-side codebook
     # collect this engine deliberately avoids on registered paths.
-    if rerank not in ("expr", "arrow"):
-        raise ValueError(f"rerank must be 'expr' or 'arrow', got {rerank!r}")
     if codebook not in ("sampled", "kmeans"):
         raise ValueError(
             f"codebook must be 'sampled' or 'kmeans', got {codebook!r}"
@@ -1461,14 +1420,12 @@ def similarity_ivf_ann(
     cand = F.broadcast(probes).join(assigned, "cell_id").filter(
         F.col("cand_id") != F.col("query_id")
     )
-    if rerank == "arrow":
-        cosine = _cosine_arrow(
-            F.col("qe"), F.col("ce2"), F.col("qn2"), F.col("cn22")
-        )
-    else:
-        cosine = _dot(F.col("qe"), F.col("ce2")) / F.sqrt(
-            F.col("qn2") * F.col("cn22")
-        )
+    # the JVM fold, not _cosine_arrow: the candidate set is probe-bounded
+    # (|Q| x nprobe cells), so the Arrow exchange costs more than the
+    # kernel saves (measured at sf0.1: 0.82 s vs 1.05 s best-of-5)
+    cosine = _dot(F.col("qe"), F.col("ce2")) / F.sqrt(
+        F.col("qn2") * F.col("cn22")
+    )
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("cand_id"))
     return (
         cand.select("query_id", "cand_id", cosine.alias("cosine"))
@@ -1519,12 +1476,12 @@ def embed_features_arrow(df: DataFrame, dim: int = 64, sketch: bool = True) -> D
     partition — no shuffle, bounded memory.
 
     Bit-exactness: the expression form folds strictly left over the
-    element index with a 0.0 init. The kernel accumulates with one
-    vectorized op per element index d (``acc += E[:, d] * P[:, d]``), so
-    every (row, plane) accumulator sees the IDENTICAL operand sequence,
-    and IEEE doubles are deterministic given identical order. The sketch
-    bit sum is exact integer arithmetic. Equality (0 ulp) is asserted
-    against the expression form in ``tests/test_similarity.py``.
+    element index with a 0.0 init; the kernel's ``n2`` and plane
+    projections are :func:`_np_row_dot` / :func:`_np_dot`, which fold in
+    that same order, and IEEE doubles are deterministic given identical
+    order. The sketch bit sum is exact integer arithmetic. Equality
+    (0 ulp) is asserted against the expression form in
+    ``tests/test_similarity.py``.
     """
     from pyspark.sql.types import (
         ArrayType,
@@ -1578,20 +1535,12 @@ def embed_features_arrow(df: DataFrame, dim: int = 64, sketch: bool = True) -> D
                     f"embed_features_arrow: expected dim={dim} embeddings,"
                     f" got batch shape {e64.shape}"
                 )
-            n2 = np.zeros(len(pdf), dtype=np.float64)
-            acc = (
-                np.zeros((len(pdf), N_PLANES), dtype=np.float64) if sketch else None
-            )
-            for d in range(e64.shape[1]):
-                col = e64[:, d]
-                n2 = n2 + col * col
-                if sketch:
-                    acc = acc + col[:, None] * planes[None, :, d]
             out = pdf[passthrough].copy()
             out["e"] = list(e64)
-            out["n2"] = n2
+            out["n2"] = _np_row_dot(e64, e64)
             if sketch:
-                out["sketch"] = ((acc > 0) * bit_vals[None, :]).sum(axis=1)
+                proj = _np_dot(e64, planes)
+                out["sketch"] = ((proj > 0) * bit_vals[None, :]).sum(axis=1)
             yield out
 
     return df.mapInPandas(kernel, out_schema)

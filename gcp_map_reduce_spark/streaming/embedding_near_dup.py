@@ -66,6 +66,8 @@ from gcp_map_reduce_spark.operators.similarity import (
     IVF_DEDUP_NPROBE,
     NEAR_DUP_COSINE,
     _cosine_arrow,
+    _np_dot,
+    _np_nearest,
     embed_features_arrow,
     ivf_dedup_n_cells,
     ivf_probe_cells,
@@ -129,20 +131,6 @@ def _codebook(ss: SparkSession, store_dir: str, batch_feats: DataFrame,
 # remote filesystem schemes). Bound: ~550 B per accepted vector at d=64
 # — fall back to collected_accept=False beyond driver memory.
 _EMB_CACHE: dict[str, dict] = {}
-
-
-def _seq_dots(E, C):
-    """(n, k) pairwise dot products with the d-SEQUENTIAL fold — every
-    (i, j) element accumulates E[i,d]*C[j,d] for d = 0..D-1 in order,
-    bit-identical to the JVM `_dot` left fold and to `_cosine_arrow`
-    (the tiles/cell-kernel exactness argument; never BLAS matmul, whose
-    blocked/FMA summation breaks bit-parity)."""
-    import numpy as np
-
-    acc = np.zeros((E.shape[0], C.shape[0]), dtype=np.float64)
-    for d in range(E.shape[1]):
-        acc += E[:, d][:, None] * C[:, d][None, :]
-    return acc
 
 
 def _emb_cache_load(ss: SparkSession, store_dir: str) -> dict | None:
@@ -325,9 +313,9 @@ def run_streaming_embedding_near_dup(
     ``collected_accept`` (r12 default, the minhash stream's pattern):
     triggers run driver-centric — batch features collected once, cell
     assignment and acceptance decided in numpy with bit-identical
-    folds (``_seq_dots`` = the JVM left fold; probe tie-breaks via
-    lexsort on (d, cell_id)) against a driver mirror of the store;
-    three Spark actions per steady-state trigger. Measured on the
+    folds (``similarity._np_nearest`` / ``_np_dot``, the twins of the
+    JVM probe ranking and left fold) against a driver mirror of the
+    store; three Spark actions per steady-state trigger. Measured on the
     20k-vector stress drain @16 batches: 518 → 632 vecs/s fresh, 823
     warm; decisions AND store rows pytest-asserted identical to the
     distributed plan, which still runs for remote store_dir schemes or
@@ -349,10 +337,10 @@ def run_streaming_embedding_near_dup(
         collect the batch's features (ONE job — the old plan broadcast
         the batch twice, each broadcast a driver collect), assign cells
         and decide acceptance in numpy against the driver store mirror
-        (bit-identical folds: `_seq_dots` for assignment distances and
-        pair cosines, `np.lexsort` for the (d, cell_id) probe
-        tie-break), then write the two batch dirs. Steady state = three
-        Spark actions; the batch-parity test pins exactness."""
+        (bit-identical folds: `_np_nearest` for the (d, cell_id) probe
+        ranking, `_np_dot` for pair cosines), then write the two batch
+        dirs. Steady state = three Spark actions; the batch-parity test
+        pins exactness."""
         import numpy as np
 
         from gcp_map_reduce_spark.streaming.near_dup import _store_layout
@@ -365,14 +353,10 @@ def run_streaming_embedding_near_dup(
                 [np.asarray(e, dtype=np.float64) for e in feats_pdf["e"]]
             )
             n2 = feats_pdf["n2"].to_numpy(dtype=np.float64)
-            # assignment distances: (n2 - 2*dot) + cn2 — the same
-            # operand order as ivf_probe_cells' expression
-            dists = (n2[:, None] - 2 * _seq_dots(E, C)) + cn2[None, :]
-            k = min(n_probe, len(cell_ids))
-            cells = []
-            for i in range(len(ids)):
-                order = np.lexsort((cell_ids, dists[i]))[:k]
-                cells.append([int(cell_ids[j]) for j in order])
+            cells = [
+                [int(c) for c in cell_ids[row]]
+                for row in _np_nearest(E, n2, cell_ids, C, cn2, n_probe)
+            ]
         else:
             E = np.empty((0, 0))
             n2 = np.empty(0)
@@ -407,7 +391,7 @@ def run_streaming_embedding_near_dup(
             hit = False
             if cand_store:
                 c = np.asarray(cand_store)
-                cos = _seq_dots(E[i : i + 1], s_E[c])[0] / np.sqrt(
+                cos = _np_dot(E[i : i + 1], s_E[c])[0] / np.sqrt(
                     n2[i] * s_n2[c]
                 )
                 hit = bool(((cos >= threshold) & (s_ids[c] != ids[i])).any())
@@ -418,7 +402,7 @@ def run_streaming_embedding_near_dup(
                 cand_b = [j for j in cand_b if ids[j] < ids[i]]
                 if cand_b:
                     c = np.asarray(cand_b)
-                    cos = _seq_dots(E[i : i + 1], E[c])[0] / np.sqrt(
+                    cos = _np_dot(E[i : i + 1], E[c])[0] / np.sqrt(
                         n2[i] * n2[c]
                     )
                     hit = bool((cos >= threshold).any())

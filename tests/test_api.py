@@ -203,6 +203,14 @@ def test_semantic_search_validates_input_and_ranks(spark, tmp_path):
     assert post(
         {"queries": [{"query_id": 2**63, "embedding": ok_emb}]}
     ).status_code == 400
+    # a zero-norm query has no cosine: 400, not the JVM's ANSI
+    # divide-by-zero surfacing as a 500 (also when the squares underflow)
+    assert "zero norm" in err(
+        post({"queries": [{"query_id": -1, "embedding": [0.0] * dim}]})
+    )
+    assert "zero norm" in err(
+        post({"queries": [{"query_id": -1, "embedding": [1e-200] * dim}]})
+    )
     # k / n_probe: junk types and caps
     q = [{"query_id": 1, "embedding": ok_emb}]
     assert "k must be" in err(post({"queries": q, "k": "five"}))

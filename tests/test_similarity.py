@@ -307,20 +307,6 @@ def test_choose_embedding_payload_probe_and_decision(spark):
     assert auto == base
 
 
-def test_ivf_rerank_forms_identical(spark):
-    """Both re-rank implementations (JVM expression fold vs Arrow kernel)
-    must return identical rows — which one runs is purely a measured
-    performance choice (expr won on the probe-bounded candidate set)."""
-    from gcp_map_reduce_spark.operators.similarity import similarity_ivf_ann
-
-    key = lambda r: (r.query_id, r.cand_id)  # noqa: E731
-    expr = sorted(similarity_ivf_ann(spark, SF_ORACLE).collect(), key=key)
-    arrow = sorted(
-        similarity_ivf_ann(spark, SF_ORACLE, rerank="arrow").collect(), key=key
-    )
-    assert expr and expr == arrow
-
-
 def test_ivf_kmeans_codebook_recall_and_contract(spark):
     """The Lloyd-refined codebook option must honor the IVF contract
     (every query answered, <= TOP_K rows each) and keep recall above a
